@@ -103,7 +103,6 @@ def tune_time_shift_w1(
         )
     )
     scores = scores.withColumn("_mse_fp", _mse_fp)
-    all_scores = scores
     if selection == "knee":
         # largest w1 within (1 + knee_tol) of the per-site minimum error
         min_mse = Window.partitionBy(site_col)
@@ -125,9 +124,9 @@ def tune_time_shift_w1(
             site_col,
             F.col("w1").alias("best_w1"),
             F.col("holdout_mse"),
-        )
-        .join(
-            all_scores.groupBy(site_col).agg(F.count("*").alias("n_grid")),
-            on=site_col,
+            # _score returns one row per group (inf without holdout days),
+            # so every site solves exactly len(w1_grid) points; a count
+            # joined back from the grid output would run the solve twice
+            F.lit(len(w1_grid)).cast("long").alias("n_grid"),
         )
     )

@@ -53,6 +53,7 @@ from solar_data_tools_spark.algorithms.daily_flags import (
 )
 from solar_data_tools_spark.algorithms.scoring import daily_quality_scores
 from solar_data_tools_spark.plans.pipeline import run_pipeline
+from solar_data_tools_spark.session import materialize_df
 
 _NOERR = "No error"
 
@@ -93,16 +94,18 @@ def run_fleet_pipeline(
     shifts a site's grid by the detected whole-hour offset when
     ``|offset| > 1`` (reference :629-640).
 
-    ``materialize`` picks the fault-tolerance mode of the two shared
-    mid-pipeline tables (``session.materialize_df``): ``"local"``
-    (default — executor-local DISK_ONLY blocks, fastest, but an
-    executor loss fails the job, so use on local[k] or dedicated
-    non-preemptible clusters), ``"reliable"`` (checkpoint into
-    ``spark.sparkContext.setCheckpointDir`` — one DFS write per table,
-    survives executor loss; the right mode for long fleet jobs on
-    preemptible/spot executors — r11 verdict item 3), or ``"none"``
-    (fully lazy; the grid chain re-executes per consumer — only for
-    plan audits).
+    ``materialize`` picks the fault-tolerance mode
+    (``session.materialize_df``) of every stage output the report reads
+    more than once — the standardized grid, the daily table, the
+    per-day scores and the capacity labels — so each solver stage runs
+    once per site: ``"local"`` (default — executor-local DISK_ONLY
+    blocks, fastest, but an executor loss fails the job, so use on
+    local[k] or dedicated non-preemptible clusters), ``"reliable"``
+    (checkpoint into ``spark.sparkContext.setCheckpointDir`` — one DFS
+    write per table, survives executor loss; the right mode for long
+    fleet jobs on preemptible/spot executors — r11 verdict item 3), or
+    ``"none"`` (fully lazy; the grid chain and the scoring and
+    capacity kernels re-execute per consumer — only for plan audits).
 
     ``run_loss_analysis=True`` chains the loss-factor leg of the fleet
     runner (``run_loss_factor_analysis`` + ``loss_analysis.report()``,
@@ -130,6 +133,22 @@ def run_fleet_pipeline(
         F.broadcast(bad_sites.select(site_col)), site_col, "left_anti"
     )
 
+    # ---- stage graph. A grouped-map (mapInPandas) output read by k
+    # consumers runs its kernel k times unless it is materialized, so
+    # every stage output with more than one consumer goes through
+    # ``shared`` exactly once:
+    #
+    #   standardized -> daily, scores, std_out   (inside run_pipeline)
+    #   daily        -> cap, daily_ts, tz, site_days, daily_loss
+    #   scores       -> score_report, cluster_viol, _n, daily_ts
+    #   cap          -> cap_report, daily_loss
+    #
+    # daily_ts (read by the w1 grid and the shift solve) is a join of
+    # two shared tables and runs no kernel; every other stage output
+    # (tuned w1, shifts, loss) has one consumer and stays lazy.
+    def shared(df: DataFrame) -> DataFrame:
+        return materialize_df(df, materialize)
+
     # ---- relational core: clamp -> standardize -> daily stats.
     # With no explicit sampling, each site grids at its OWN inferred
     # cadence (per_site mode) — the faithful fleet semantics: the
@@ -150,6 +169,7 @@ def run_fleet_pipeline(
         min_val=min_val,
         slots_per_day=slots_per_day,
         per_site=per_site,
+        materialize=materialize,
     )
     if not per_site and slots_per_day is None:
         # the grid run_pipeline standardized onto IS the explicit
@@ -157,50 +177,21 @@ def run_fleet_pipeline(
         # delta here would disagree with the actual grid and fail
         # every site's whole-days contract in the scorer
         slots_per_day = max(int(86400 // sampling_seconds), 1)
-
-    # the report fans the pipeline core out to many consumers (scoring,
-    # capacity changes, time shifts, tz check, std_out, loss analysis)
-    # — materialize the two shared tables once instead of re-deriving
-    # the explode+nearest-join grid chain per leg (values unchanged;
-    # measured 19.4 s -> 8.5 s for the 150-site sf0.01 report on a
-    # quiet host). The r11 review suggested moving the standardized
-    # checkpoint INSIDE run_pipeline (materialize=True) so daily's
-    # lineage reads it instead of embedding a second grid chain; an
-    # A/B on the only host available (load avg ~9, both variants
-    # re-measured with the same count() harness) was equivalent within
-    # contention noise (committed form 26.8/15.9 s cold/warm vs 47/34 s
-    # on an earlier noop harness that computes every solver column —
-    # the harness difference, not the checkpoint position, dominated).
-    # Keeping this form: it is the verified-green shape, daily's
-    # independent lineage stays Catalyst-fusable, and the duplicate
-    # materialization is one extra narrow-table pass. run_pipeline
-    # (materialize=True) remains available for single-grid consumers
-    # like the q169 spine.
-    import dataclasses
-
-    from solar_data_tools_spark.session import materialize_df
-
-    # local mode is DISK_ONLY: the grid at fleet scale must not compete
-    # with execution memory in small-heap sessions (the sf0.1 sweep's
-    # vanilla 1g driver OOMed with the default level — r11); reliable
-    # mode trades one DFS write per table for executor-loss survival
-    core = dataclasses.replace(
-        core,
-        standardized=materialize_df(core.standardized, materialize),
-        daily=materialize_df(core.daily, materialize),
-    )
+    daily = shared(core.daily)
 
     # ---- scoring stage (per-site grouped map, error-isolated)
-    scores = daily_quality_scores(
-        core.standardized,
-        slots_per_day=None if per_site else slots_per_day,
-        site_col=site_col,
-        capture_errors=True,
+    scores = shared(
+        daily_quality_scores(
+            core.standardized,
+            slots_per_day=None if per_site else slots_per_day,
+            site_col=site_col,
+            capture_errors=True,
+        )
     )
 
     # ---- flag stages on the daily table (error-isolated)
-    cap = detect_capacity_changes(
-        core.daily, site_col=site_col, capture_errors=True
+    cap = shared(
+        detect_capacity_changes(daily, site_col=site_col, capture_errors=True)
     )
     # time shifts per the reference defaults (data_handler.py:1330-1414):
     # srss solar noon, fit masked to clear days when clearness >= 0.3
@@ -212,7 +203,7 @@ def run_fleet_pipeline(
         "no_errors",
         "data_clearness_score",
     )
-    daily_ts = core.daily.join(flag_cols, [site_col, "date"], "left")
+    daily_ts = daily.join(flag_cols, [site_col, "date"], "left")
     use = F.when(
         F.col("data_clearness_score") >= 0.3, F.col("clear")
     ).otherwise(F.col("no_errors"))
@@ -306,7 +297,7 @@ def run_fleet_pipeline(
     # sub-hour shift fix by construction, so the rounded offset agrees;
     # documented divergence kept for one fewer pass over the fleet.
     tz = (
-        core.daily.groupBy(site_col)
+        daily.groupBy(site_col)
         .agg(F.avg("solar_noon_rs").alias("_noon"))
         .select(
             site_col,
@@ -362,7 +353,7 @@ def run_fleet_pipeline(
         "loss_soiling",
         "loss_capacity",
     ]
-    site_days = core.daily.groupBy(site_col).agg(
+    site_days = daily.groupBy(site_col).agg(
         F.count("*").alias("_nd")
     )
     if run_loss_analysis:
@@ -372,7 +363,7 @@ def run_fleet_pipeline(
 
         eligible = site_days.where(F.col("_nd") > 365).select(site_col)
         daily_loss = (
-            core.daily.join(
+            daily.join(
                 cap.where(F.col("error") == _NOERR).select(
                     site_col, "date", "capacity_label"
                 ),

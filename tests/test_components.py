@@ -589,6 +589,33 @@ def test_read_table_normalizes_timestamp_ntz(spark, sf_small, tmp_path):
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", prev)
 
 
+def test_read_table_cache_frees_dropped_session(spark, sf_small):
+    """The plan cache must not keep a session alive: every cached
+    DataFrame references its session, so a cache keyed by session from
+    outside the session object pins the session forever."""
+    import gc
+    import weakref
+
+    from pyspark import RDD
+
+    from solar_data_tools_spark.session import read_table
+
+    path = f"{sf_small}/events.parquet"
+    # SparkSession() rebinds RDD.toDF to a closure over the newest
+    # session; restore the shared session's binding, so that only the
+    # plan cache could keep s2 alive
+    to_df = RDD.toDF
+    s2 = spark.newSession()
+    RDD.toDF = to_df
+    df = read_table(s2, path)
+    assert read_table(s2, path) is df
+    assert read_table(spark, path) is not df
+    ref = weakref.ref(s2)
+    del s2, df
+    gc.collect()
+    assert ref() is None
+
+
 # ----------------------------------------------------- media sniffing (r04)
 def _make_png(w, h):
     import struct, zlib

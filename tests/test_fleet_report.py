@@ -179,18 +179,13 @@ def test_scoring_stage_error_isolation(spark):
     assert bad[0]["date"] is None
 
 
-def test_loss_analysis_leg(spark):
-    """The runner's loss-factor stage pair (runner.py:147-175): a
-    >365-day site gets a degradation rate; a short site gets the
-    runner's own <=1-year gate message with null loss fields; with
-    run_loss_analysis=False the columns say 'not requested'."""
-    from solar_data_tools_spark.plans.fleet import fleet_report
-
+def _loss_fleet(spark):
+    """Site 0: 400 days with -5%/yr planted degradation (past the
+    runner's 1-year loss gate); site 1: 20 days (gated)."""
     slots = 96
     hod = np.arange(slots) * 24.0 / slots
     bell = np.clip(np.sin((hod - 6.0) / 12.0 * np.pi), 0.0, None) * 5.0
     rows = []
-    # site 0: 400 days with -5%/yr planted degradation
     for d in range(400):
         base = pd.Timestamp("2023-01-01") + pd.Timedelta(days=d)
         scale = (1.0 - 0.05 * d / 365.0)
@@ -199,17 +194,26 @@ def test_loss_analysis_leg(spark):
                 (0, base + pd.Timedelta(minutes=15 * i),
                  float(bell[i] * scale))
             )
-    # site 1: 20 days (gate)
     for d in range(20):
         base = pd.Timestamp("2023-01-01") + pd.Timedelta(days=d)
         for i in range(slots):
             rows.append(
                 (1, base + pd.Timedelta(minutes=15 * i), float(bell[i]))
             )
-    meas = spark.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame(rows, columns=["site", "ts", "value"])
     ).select("site", "ts", F.monotonically_increasing_id().alias("seq"),
              "value")
+
+
+def test_loss_analysis_leg(spark):
+    """The runner's loss-factor stage pair (runner.py:147-175): a
+    >365-day site gets a degradation rate; a short site gets the
+    runner's own <=1-year gate message with null loss fields; with
+    run_loss_analysis=False the columns say 'not requested'."""
+    from solar_data_tools_spark.plans.fleet import fleet_report
+
+    meas = _loss_fleet(spark)
     # time_shift_w1 pinned: skips the 11-point w1 grid search, which is
     # orthogonal to the loss leg under test (saves ~2 min of suite time)
     rep = {
@@ -233,6 +237,56 @@ def test_loss_analysis_leg(spark):
         meas, sampling_seconds=900, time_shift_w1=5.0
     ).collect()[0]
     assert off["run_loss_analysis_error"] == "Loss analysis not requested"
+
+
+def test_fleet_report_runs_each_kernel_once_per_group(spark, monkeypatch):
+    """One report action calls every grouped-map kernel exactly once per
+    group: a stage output with several consumers (scores, capacity
+    labels, the w1 grid) is materialized, not recomputed per consumer.
+    Each ``grouped_apply`` call gets its own accumulator, named by the
+    stage function that made the call."""
+    import sys
+
+    from solar_data_tools_spark import parallel
+    from solar_data_tools_spark.algorithms import daily_flags, scoring
+    from solar_data_tools_spark.plans.fleet import fleet_report
+
+    real = parallel.grouped_apply
+    stages = []  # (stage, input, keys, accumulator)
+
+    def counting(df, keys, fn, schema, **kwargs):
+        acc = spark.sparkContext.accumulator(0)
+
+        def counted(pdf):
+            acc.add(1)
+            return fn(pdf)
+
+        stages.append((sys._getframe(1).f_code.co_name, df, keys, acc))
+        return real(df, keys, counted, schema, **kwargs)
+
+    for mod in (parallel, scoring, daily_flags):
+        monkeypatch.setattr(mod, "grouped_apply", counting)
+    rep = fleet_report(
+        _loss_fleet(spark), sampling_seconds=900, run_loss_analysis=True
+    ).toPandas()
+    calls = {name: acc.value for name, _, _, acc in stages}
+    assert len(rep) == 2
+    assert (rep["run_pipeline_error"] == "No error").all()
+    assert len(calls) == len(stages) == 5
+    # the calls are read above: the jobs that count the groups below
+    # rerun the lazy stages and would inflate them
+    groups = {
+        name: df.select(*keys).distinct().count()
+        for name, df, keys, _ in stages
+    }
+    assert groups == {
+        "daily_quality_scores": 2,
+        "detect_capacity_changes": 2,
+        "tune_time_shift_w1": 22,  # 2 sites x 11 grid points
+        "detect_time_shifts": 2,
+        "run_loss_factor_analysis": 1,  # the 400-day site only
+    }
+    assert calls == groups
 
 
 def test_per_site_native_cadence_fleet(spark):
