@@ -34,16 +34,6 @@ SUNRISE_TAU = 0.1  # reference sunrise_sunset_estimation.py:40
 SUNSET_TAU = 0.9  # reference sunrise_sunset_estimation.py:41
 
 
-def _tl1(y, tau, use_ixs=None, admm_iters=30000):
-    s, _obj = solve_tl1_l2d2p365(
-        np.asarray(y, dtype=np.float64),
-        tau=tau,
-        use_ixs=use_ixs,
-        admm_iters=admm_iters,
-    )
-    return s
-
-
 # ---------------------------------------------------------------- sun mask
 def detect_sun(mat: np.ndarray, threshold: float) -> np.ndarray:
     """daytime.py:41-47 + scale_data (daytime.py:49-60)."""
@@ -174,7 +164,7 @@ def density_scores(
     filled0 = np.where(np.isnan(mat), 0.0, mat)
     dens = (filled0 > 0.02 * cap).sum(axis=0) / mat.shape[0]
     use = (dens > threshold) & (dens < 0.8)
-    fit = _tl1(dens, 0.85, use_ixs=use)
+    fit, _obj = solve_tl1_l2d2p365(dens, 0.85, use_ixs=use)
     # fit can be 0/NaN on degenerate (all-dark) day subsets; the inf/NaN
     # scores are handled by the downstream flag thresholds — silence the
     # intentional divide so executor logs stay clean
@@ -253,11 +243,11 @@ def clear_day_weights(
     thresholds and the sparsity outlier filter."""
     tc = np.abs(filled[:-2] - 2 * filled[1:-1] + filled[2:]).sum(axis=0)
     tc = 1 - tc / np.nanmax(tc)
-    y = _tl1(tc, 0.9)
+    y, _obj = solve_tl1_l2d2p365(tc, 0.9)
     tc = np.clip(tc / y, 0, None)
     de = filled.sum(axis=0)
     de = de / np.nanmax(de)
-    x = _tl1(de, 0.9)
+    x, _obj = solve_tl1_l2d2p365(de, 0.9)
     de = np.clip(de / x, 0, 1)
     weights = np.sqrt(tc) * np.sqrt(de)
     selection = (tc > smoothness_threshold) & (de > energy_threshold)

@@ -224,8 +224,8 @@ def _guarded_tick_sum(t: Column, digits: int) -> Column:
 # functions, literals (scientific notation = DOUBLE, 'D' suffix where
 # needed) and cast placements as the Column path, so aggregation
 # semantics, guard behavior and VALUES are identical (parity-tested in
-# tests/test_components.py; every consuming certified query re-verified
-# against its unchanged DuckDB oracle).
+# tests/test_overflow_guards.py; every consuming certified query
+# re-verified against its unchanged DuckDB oracle).
 
 import re as _re
 
@@ -281,7 +281,15 @@ def tick_sum(col: Column | str, digits: int = 6, wide: bool = False) -> Column:
     rounded on the JVM side but an oracle's int128->double conversion
     may differ in the last ulp, so hash-certified queries at that
     magnitude should hash :func:`tick_sum_wide_ticks` cast to STRING
-    instead of this display value (q179 is the model)."""
+    instead of this display value (q179 is the model).
+
+    ``col`` is a Column or a string. A string that is a bare identifier
+    (``[A-Za-z_][A-Za-z0-9_]*``) names a column; ANY other string is a
+    Spark SQL expression fragment (``"price * (1 - discount)"``),
+    interpolated unescaped into the SQL the aggregate is parsed from.
+    Pass only program-built fragments; wrap untrusted text in
+    ``F.col`` instead. Both forms build the same expression and return
+    the same values (tests/test_overflow_guards.py)."""
     if wide:
         return tick_sum_wide_ticks(col, digits).cast("double") / F.lit(
             float(10**digits)
@@ -306,7 +314,9 @@ def tick_avg(col: Column | str, digits: int = 6, wide: bool = False) -> Column:
     SQL mirror: ``sum(CAST(floor((x) * 1eD + 0.5) AS BIGINT))
     / count(x) / 1eD``. ``wide=True`` escalates the tick sum to
     DECIMAL(38,0) (see ``tick_sum``; same STRING-hash caveat past 2^53
-    ticks)."""
+    ticks). A string ``col`` is a column name when it is a bare
+    identifier and an unescaped SQL fragment otherwise, exactly as in
+    ``tick_sum``."""
     if isinstance(col, str) and not wide:
         # SQL fast path (r14) — see tick_sum
         frag = _sql_fragment(col)

@@ -1,14 +1,16 @@
-"""Signal decompositions (SURVEY.md §2.8) — Spark-first implementations.
+"""Signal decompositions (SURVEY.md §2.8) — Spark-first wrappers.
 
 The reference solves these as cvxpy/OSD convex programs per series
 (solardatatools/signal_decompositions.py). Here each model is a small,
-deterministic numpy solve wrapped in ``applyInPandas`` so a fleet of N
-sites runs as N parallel tasks after one shuffle on the site key.
+deterministic numpy solve from ``solvers.exact``, wrapped in
+``applyInPandas``/``mapInPandas`` so a fleet of N sites runs as parallel
+tasks after one shuffle on the site key.
 
-Round-1 scope: D2 ``tl1_l2d2p365`` (quantile loss + smooth periodic
-Fourier fit — facade signal_decompositions.py:127-185) via IRLS pinball
-regression on a Fourier basis, plus the trend-diagnostic least-squares fit
-it shares machinery with. Later rounds add D1/D3-D9 on the same pattern.
+The per-series wrappers below (D1 ``l2_l1d1_l2d2p365``, D2
+``tl1_l2d2p365``, D4 ``l2_l1d2_constrained``) guard short or degenerate
+inputs and delegate to the fixture-validated exact solvers; the fleet
+form of D2 (``fit_seasonal_quantile``) batches a partition's sites into
+one interior-point solve.
 """
 
 from __future__ import annotations
@@ -17,36 +19,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-def quantile_regression_irls(
-    X: np.ndarray,
-    y: np.ndarray,
-    tau: float = 0.5,
-    max_iter: int = 50,
-    tol: float = 1e-8,
-    ridge: float = 1e-8,
-) -> np.ndarray:
-    """Pinball-loss linear regression via iteratively reweighted least
-    squares (smoothed check function). Deterministic given inputs.
-
-    Solves  min_beta  sum_i rho_tau(y_i - X_i beta)  with the standard IRLS
-    weights w_i = |tau - 1{r_i<0}| / max(|r_i|, eps).
-    """
-    n, p = X.shape
-    beta = np.linalg.lstsq(X, y, rcond=None)[0]
-    eps = 1e-6
-    for _ in range(max_iter):
-        r = y - X @ beta
-        w = np.where(r >= 0, tau, 1.0 - tau) / np.maximum(np.abs(r), eps)
-        XtW = X.T * w
-        lhs = XtW @ X + ridge * np.eye(p)
-        rhs = XtW @ y
-        new_beta = np.linalg.solve(lhs, rhs)
-        if np.max(np.abs(new_beta - beta)) < tol:
-            beta = new_beta
-            break
-        beta = new_beta
-    return beta
 
 
 def tl1_l2d2p365_fit(
@@ -60,9 +32,10 @@ def tl1_l2d2p365_fit(
 
     Parity target: ``tl1_l2d2p365`` (signal_decompositions.py:127-185) —
     pinball(tau) residual + smooth periodic component with period 365.2425.
-    Delegates to the exact ADMM solver (``solvers.exact``), which is
-    validated against the reference's own fixture files at the reference
-    tolerances (tests/test_solver_fixtures.py).
+    Delegates to the exact interior-point solver
+    (``solvers.exact.solve_tl1_l2d2p365``), which is validated against
+    the reference's own fixture files at the reference tolerances
+    (tests/test_solver_fixtures.py).
 
     Returns the fitted seasonal values (same length as ``y``); NaNs in
     ``y`` are excluded from the fit and filled in the output.
@@ -89,10 +62,8 @@ def tl1_l2d2p365_fit(
 def l2_l1d1_l2d2p365_fit(
     y: np.ndarray,
     w1: float = 5.0,
-    tau: float | None = None,
     num_harmonics: int = 3,
     period: float = 365.2425,
-    n_iter: int = 5,
 ) -> tuple[np.ndarray, np.ndarray]:
     """D1 — decompose a daily signal into piecewise-constant + smooth
     seasonal components.
@@ -121,8 +92,6 @@ def l2_l1d1_l2d2p365_fit(
 def l2_l1d2_constrained_fit(
     y: np.ndarray,
     w: float = 1.0,
-    n_irls: int = 20,
-    eps: float = 1e-6,
 ) -> np.ndarray:
     """D4 — piecewise-linear fit of a CDF: l2 residual + l1 of the second
     difference, constrained to f(0)=y[0], f(end)=y[-1].
@@ -133,9 +102,9 @@ def l2_l1d2_constrained_fit(
     x[0]=0, x[-1]=1; general endpoints are handled by the affine map
     x = a + (b-a) x_hat, under which the l1 weight rescales to w/(b-a).
 
-    Scale note: dense solve is O(n^3) — fine at the CDF grid sizes the
-    reference uses after resampling (<= a few thousand); the resample step
-    (A11) is what keeps n bounded, exactly as in the reference.
+    Scale note: each ADMM iteration is two FFT-based DST solves, O(n log n)
+    in the CDF grid size; the resample step (A11) keeps n bounded, exactly
+    as in the reference.
     """
     from solar_data_tools_spark.solvers.exact import solve_l2_l1d2_constrained
 

@@ -18,9 +18,13 @@ statements — NOT a code port):
   squared residual + w1 * l1 of second differences, first value pinned to
   0 and last to 1 (piecewise-linear CDF fit for clipping detection).
 
-All four are solved with over-relaxed ADMM followed by a support-pattern
-"polish" solve (an equality-constrained QP on the detected sparsity
-pattern), which recovers the interior-point optimum to high accuracy —
+``tl1_l2d2p365`` is a penalized quantile regression and is solved by
+``_pinball_ipm``, a batched Mehrotra interior-point method that is also
+the package's only other pinball solver (``pinball_regression``: the
+loss-factor envelope and the D7 quantile surface). The other three are
+solved with over-relaxed ADMM followed by a support-pattern "polish"
+solve (an equality-constrained QP on the detected sparsity pattern),
+which recovers the interior-point optimum to high accuracy. All four are
 validated against the reference's own fixture files in
 ``tests/test_solver_fixtures.py`` at the reference's tolerances
 (MAE < 1e-3, objective to 1 decimal; see reference
@@ -95,15 +99,6 @@ def _diff1(n: int) -> np.ndarray:
     idx = np.arange(n - 1)
     D[idx, idx] = -1.0
     D[idx, idx + 1] = 1.0
-    return D
-
-
-def _diff2(n: int) -> np.ndarray:
-    D = np.zeros((n - 2, n))
-    idx = np.arange(n - 2)
-    D[idx, idx] = 1.0
-    D[idx, idx + 1] = -2.0
-    D[idx, idx + 2] = 1.0
     return D
 
 
@@ -322,91 +317,30 @@ def solve_tl1_l2d2p365(
     use_ixs: np.ndarray | None = None,
     num_harmonics: int = 3,
     period: float = PERIOD_DAYS,
-    admm_iters: int = 30000,
-    rho: float = 0.1,
 ):
     """Minimize  w0 * sum_use pinball_tau(y - B th) + th' Q th.
 
     Returns (s_seas, obj).
 
-    Delegates to the batched interior-point solver (J=1), which reaches a
-    lower objective than the historical ADMM path in ~30 Newton steps
-    (fixture-validated); the over-relaxed ADMM below is kept as the
-    fallback for the rare ill-conditioned case where the IPM line search
-    stalls before the residual tolerances are met.
+    The J=1 call of :func:`solve_tl1_l2d2p365_batch` (fixture-validated).
+    A fit that is not finite raises ``FloatingPointError``; inside a
+    fleet stage ``parallel.wrap_capture_errors`` turns it into that
+    site's error row.
     """
     y = np.asarray(y, dtype=np.float64)
     use1 = None if use_ixs is None else np.asarray(use_ixs, dtype=bool)[:, None]
-    try:
-        S1, O1 = solve_tl1_l2d2p365_batch(
-            y[:, None],
-            tau,
-            w0=w0,
-            w2=w2,
-            use_ixs=use1,
-            num_harmonics=num_harmonics,
-            period=period,
-            admm_iters=admm_iters,
-        )
-    except np.linalg.LinAlgError:
-        S1, O1 = None, None
-    if S1 is not None and np.all(np.isfinite(S1)) and np.isfinite(O1[0]):
-        return S1[:, 0], float(O1[0])
-    T = len(y)
-    use = np.isfinite(y)
-    if use_ixs is not None:
-        use &= np.asarray(use_ixs, dtype=bool)
-
-    B = trig_basis(T, num_harmonics, period)
-    q = harmonic_penalty(num_harmonics, w2, period) + 1e-12
-    Bu = B[use]
-    yu = y[use]
-
-    # SVD-whitened parameterization: Bu th = U w with orthonormal U. When
-    # period >> T (short series fit against the yearly basis) the raw trig
-    # columns are nearly collinear and plain ADMM crawls; in the whitened
-    # coordinates H = 2 Qw + rho I is perfectly conditioned, so the solve
-    # converges in a few hundred iterations regardless of series length.
-    U, sv, Vt = np.linalg.svd(Bu, full_matrices=False)
-    keep = sv > 1e-12 * (sv[0] if len(sv) else 1.0)
-    U, sv, Vt = U[:, keep], sv[keep], Vt[keep]
-    M = Vt.T / sv  # th = M @ w
-    Qw = (M.T * q) @ M
-    r_dim = U.shape[1]
-
-    H = 2.0 * Qw + rho * np.eye(r_dim)
-    Hinv = np.linalg.inv(H)
-    y_scale = max(1.0, float(np.abs(yu).max()) if len(yu) else 1.0)
-    z = np.zeros(len(yu))
-    s = np.zeros(len(yu))
-    alpha = 1.8
-    lam_hi = w0 * tau / rho
-    lam_lo = w0 * (1.0 - tau) / rho
-    w = np.zeros(r_dim)
-    w_check = w.copy()
-    for it in range(admm_iters):
-        w = Hinv @ (rho * (U.T @ (yu - z + s)))
-        r = yu - U @ w
-        rh = alpha * r + (1.0 - alpha) * z
-        v = rh + s
-        z_prev = z
-        z = np.where(v > lam_hi, v - lam_hi, np.where(v < -lam_lo, v + lam_lo, 0.0))
-        s += rh - z
-        if it % 25 == 24:
-            # two independent stop rules: (a) standard primal/dual
-            # residuals; (b) the low-dimensional coefficient vector has
-            # stopped moving across a whole check interval — on kinky
-            # real-world series the duals can chatter indefinitely at the
-            # pinball kinks while the fit itself is long converged.
-            if _admm_converged(r - z, z - z_prev, rho, tol=1e-8 * y_scale):
-                break
-            if float(np.max(np.abs(w - w_check), initial=0.0)) < 1e-10 * y_scale:
-                break
-            w_check = w.copy()
-    th = M @ w
-    r = yu - Bu @ th
-    obj = float(w0 * np.sum(np.maximum(tau * r, (tau - 1.0) * r)) + th @ (q * th))
-    return B @ th, obj
+    S1, O1 = solve_tl1_l2d2p365_batch(
+        y[:, None],
+        tau,
+        w0=w0,
+        w2=w2,
+        use_ixs=use1,
+        num_harmonics=num_harmonics,
+        period=period,
+    )
+    if not (np.all(np.isfinite(S1)) and np.isfinite(O1[0])):
+        raise FloatingPointError("tl1_l2d2p365: interior-point fit is not finite")
+    return S1[:, 0], float(O1[0])
 
 
 def solve_tl1_l2d2p365_batch(
@@ -417,8 +351,6 @@ def solve_tl1_l2d2p365_batch(
     use_ixs: np.ndarray | None = None,
     num_harmonics: int = 3,
     period: float = PERIOD_DAYS,
-    admm_iters: int = 30000,
-    rho: float = 0.1,
 ):
     """Batched D2: solve ``tl1_l2d2p365`` for J series at once.
 
@@ -427,22 +359,8 @@ def solve_tl1_l2d2p365_batch(
     optional (T, J) boolean mask (AND-ed with finiteness). Returns
     (S_seas (T, J), obj (J,)).
 
-    Same convex problem per column as :func:`solve_tl1_l2d2p365`, but
-    solved as a penalized quantile regression by a batched Mehrotra
-    predictor-corrector interior-point method. With the residual split
-    r = u - v (u, v >= 0) the problem is
-
-        min  w0 (tau 1'u + (1-tau) 1'v) + th' Q th
-        s.t. B th + u - v = y   on the use set,
-
-    and each Newton step reduces — after eliminating (u, v, z_u, z_v) —
-    to one p x p normal-equation solve per column with a diagonal
-    weight, formed for all columns at once with a single einsum. The
-    whole fit converges in ~20-40 interior-point iterations versus
-    O(10^3-10^4) first-order iterations, which removes the
-    per-iteration Python overhead that dominated fleet scoring
-    (``admm_iters`` is kept for signature compatibility and acts as a
-    safety cap scaled down to IPM counts).
+    The trig basis is whitened once for the whole batch and every column
+    is fitted by :func:`_pinball_ipm`, the package's one pinball solver.
 
     A column whose series starts at global offset d relative to the
     shared axis yields the same fitted values as a per-series fit with a
@@ -451,6 +369,10 @@ def solve_tl1_l2d2p365_batch(
     pair, so both the feasible set and the objective are invariant.
     Callers may therefore stack sites with different start dates onto one
     global axis and mask the rows outside each site's range.
+
+    The columns share one stopping scale (the batch's largest |y|) and
+    one stall rule, so a column's fit equals its single-series fit to the
+    stopping tolerance (objectives to ~1e-10 relative), not bit for bit.
     """
     Y = np.asarray(Y, dtype=np.float64)
     T, J = Y.shape
@@ -460,12 +382,10 @@ def solve_tl1_l2d2p365_batch(
     M = np.isfinite(Y)
     if use_ixs is not None:
         M = M & np.asarray(use_ixs, dtype=bool)
-    Mf = M.astype(np.float64)
     Y0 = np.where(M, Y, 0.0)
 
     B = trig_basis(T, num_harmonics, period)
     q = harmonic_penalty(num_harmonics, w2, period) + 1e-12
-    nm = np.maximum(Mf.sum(axis=0), 1.0)  # valid rows per column
 
     # Whitened coordinates, shared across the batch: B = U0 S0 V0', keep
     # directions with non-negligible singular values, fit c with
@@ -479,8 +399,82 @@ def solve_tl1_l2d2p365_batch(
     keep = s0 > 1e-7 * (s0[0] if len(s0) else 1.0)
     U0, s0, V0t = U0[:, keep], s0[keep], V0t[keep]
     Wmap = V0t.T / s0
-    r = U0.shape[1]
     Qw = (Wmap.T * q) @ Wmap
+
+    C = _pinball_ipm(U0, Qw, Y0, M, tau_v, w0)
+    TH = Wmap @ C
+    S_seas = U0 @ C
+    Rfin = M * (Y0 - S_seas)
+    pin = np.where(Rfin >= 0, tau_v[None, :] * Rfin, (tau_v - 1.0)[None, :] * Rfin)
+    obj = w0 * pin.sum(axis=0) + np.einsum("pj,p,pj->j", TH, q, TH)
+    return S_seas, obj
+
+
+def pinball_regression(
+    X: np.ndarray,
+    y: np.ndarray,
+    tau: float = 0.9,
+    pen_diag: np.ndarray | None = None,
+):
+    """Penalized quantile regression on an ARBITRARY design matrix:
+
+        min  sum_i pinball_tau(y_i - X_i beta) + beta' diag(pen) beta
+
+    by :func:`_pinball_ipm` on the design whitened through its own SVD,
+    so near-collinear designs (short series, one-hot regime blocks) stay
+    solvable. NaNs in ``y`` are excluded. Returns beta.
+
+    This is the envelope-fitting core of the loss-factor model
+    (solvers/soiling.py): at a high tau the fit rides the upper envelope
+    of log energy, which nonpositive components (soiling) cannot pull
+    down — the identification mechanism of the reference's SumQuantile
+    loss (loss_factor_analysis.py:491) — and the per-level fit of the D7
+    quantile surface (solvers/quantile_surface.py).
+    """
+    X = np.asarray(X, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    use = np.isfinite(y)
+    Xu = X[use]
+    yu = y[use]
+    p = X.shape[1]
+    if pen_diag is None:
+        pen_diag = np.zeros(p)
+    pen_diag = np.asarray(pen_diag, dtype=np.float64) + 1e-12
+
+    U0, s0, V0t = np.linalg.svd(Xu, full_matrices=False)
+    keep = s0 > 1e-10 * (s0[0] if len(s0) else 1.0)
+    U0, s0, V0t = U0[:, keep], s0[keep], V0t[keep]
+    Wmap = V0t.T / s0
+    Qw = (Wmap.T * pen_diag) @ Wmap
+
+    C = _pinball_ipm(
+        U0, Qw, yu[:, None], np.ones((len(yu), 1), dtype=bool), np.full(1, tau)
+    )
+    return Wmap @ C[:, 0]
+
+
+def _pinball_ipm(U0, Qw, Y0, M, tau_v, w0=1.0):
+    """The pinball solver: fit every column of ``Y0`` (T, J) on the
+    orthonormal design ``U0`` (T, r) with the whitened quadratic penalty
+    ``Qw`` (r, r), using only the rows where the (T, J) mask ``M`` is
+    true (``Y0`` must be 0 elsewhere). ``tau_v`` holds one level per
+    column. Returns the whitened coefficients C (r, J).
+
+    A batched Mehrotra predictor-corrector interior-point method. With
+    the residual split r = u - v (u, v >= 0) each column solves
+
+        min  w0 (tau 1'u + (1-tau) 1'v) + c' Qw c
+        s.t. U0 c + u - v = y   on its mask,
+
+    and each Newton step reduces — after eliminating (u, v, z_u, z_v) —
+    to one r x r normal-equation solve per column with a diagonal
+    weight, formed for all columns at once with a single einsum. A fit
+    converges in ~20-40 iterations; the loop is capped at 200.
+    """
+    T, J = Y0.shape
+    Mf = M.astype(np.float64)
+    nm = np.maximum(Mf.sum(axis=0), 1.0)  # valid rows per column
+    r = U0.shape[1]
     Qw2 = 2.0 * Qw
 
     y_scale = max(1.0, float(np.abs(Y0).max()) if Y0.size else 1.0)
@@ -501,11 +495,10 @@ def solve_tl1_l2d2p365_batch(
     zv = np.where(M, np.broadcast_to(cv, (T, J)), 1.0).copy()
 
     eye_r = np.arange(r)
-    max_ipm = max(30, min(200, admm_iters // 100))
     done = np.zeros(J, dtype=bool)
     mu = np.full(J, np.inf)
     stall = 0
-    for _ in range(max_ipm):
+    for _ in range(200):
         r_p = Mf * (U0 @ C + u - v - Y0)
         r_dc = Qw2 @ C - U0.T @ (Mf * d)
         Fu = Mf * (zu - cu + d)
@@ -610,182 +603,7 @@ def solve_tl1_l2d2p365_batch(
         d = d + ad * dd
         zu = zu + ad * dzu
         zv = zv + ad * dzv
-
-    TH = Wmap @ C
-    S_seas = U0 @ C
-    Rfin = Mf * (Y0 - S_seas)
-    pin = np.where(Rfin >= 0, tau_v[None, :] * Rfin, (tau_v - 1.0)[None, :] * Rfin)
-    obj = w0 * pin.sum(axis=0) + np.einsum("pj,p,pj->j", TH, q, TH)
-    return S_seas, obj
-
-
-def pinball_regression(
-    X: np.ndarray,
-    y: np.ndarray,
-    tau: float = 0.9,
-    pen_diag: np.ndarray | None = None,
-    max_ipm: int = 60,
-):
-    """Penalized quantile regression on an ARBITRARY design matrix:
-
-        min  sum_i pinball_tau(y_i - X_i beta) + beta' diag(pen) beta
-
-    by the same batched Mehrotra IPM as :func:`solve_tl1_l2d2p365_batch`
-    (residual split r = u - v, p x p Newton systems), whitened through
-    the SVD of X so near-collinear designs (short series, one-hot regime
-    blocks) stay solvable. NaNs in ``y`` are excluded. Returns beta.
-
-    This is the envelope-fitting core of the loss-factor model
-    (solvers/soiling.py): at a high tau the fit rides the upper envelope
-    of log energy, which nonpositive components (soiling) cannot pull
-    down — the identification mechanism of the reference's SumQuantile
-    loss (loss_factor_analysis.py:491).
-    """
-    X = np.asarray(X, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    use = np.isfinite(y)
-    Xu = X[use]
-    yu = y[use]
-    p = X.shape[1]
-    if pen_diag is None:
-        pen_diag = np.zeros(p)
-    pen_diag = np.asarray(pen_diag, dtype=np.float64) + 1e-12
-
-    U0, s0, V0t = np.linalg.svd(Xu, full_matrices=False)
-    keep = s0 > 1e-10 * (s0[0] if len(s0) else 1.0)
-    U0, s0, V0t = U0[:, keep], s0[keep], V0t[keep]
-    Wmap = V0t.T / s0
-    Qw = (Wmap.T * pen_diag) @ Wmap
-
-    # reuse the batched solver's IPM on the whitened design by treating
-    # the whitened problem as a "basis fit" with J=1
-    S1, _obj, C = _pinball_ipm_whitened(
-        U0, Qw, yu[:, None], np.full(1, tau), max_ipm=max_ipm
-    )
-    return Wmap @ C[:, 0]
-
-
-def _pinball_ipm_whitened(U0, Qw, Y, tau_v, w0=1.0, max_ipm=200):
-    """Shared IPM core: pinball fit of columns of Y on the orthonormal
-    design U0 with quadratic penalty Qw in whitened coordinates. All
-    rows are used (callers pre-filter NaNs). Returns (fits, obj, C)."""
-    T, J = Y.shape
-    r = U0.shape[1]
-    nm = float(T)
-    y_scale = max(1.0, float(np.abs(Y).max()) if Y.size else 1.0)
-    cu = (w0 * tau_v)[None, :]
-    cv = (w0 * (1.0 - tau_v))[None, :]
-    Qw2 = 2.0 * Qw
-
-    H0 = U0.T @ U0 + Qw2 + 1e-9 * np.eye(r)
-    C = np.linalg.solve(H0, U0.T @ Y)
-    R0 = Y - U0 @ C
-    pad = 0.1 * y_scale
-    u = np.maximum(R0, 0.0) + pad
-    v = np.maximum(-R0, 0.0) + pad
-    d = np.zeros((T, J))
-    zu = np.broadcast_to(cu, (T, J)).copy()
-    zv = np.broadcast_to(cv, (T, J)).copy()
-    eye_r = np.arange(r)
-    done = np.zeros(J, dtype=bool)
-    mu = np.full(J, np.inf)
-    stall = 0
-    for _ in range(max_ipm):
-        r_p = U0 @ C + u - v - Y
-        r_dc = Qw2 @ C - U0.T @ d
-        Fu = zu - cu + d
-        Fv = zv - cv - d
-        mu_prev = mu
-        mu = (u * zu + v * zv).sum(axis=0) / (2.0 * nm)
-        prim = np.max(np.abs(r_p), axis=0, initial=0.0)
-        dual = np.max(np.abs(r_dc), axis=0, initial=0.0)
-        box = np.maximum(
-            np.max(np.abs(Fu), axis=0, initial=0.0),
-            np.max(np.abs(Fv), axis=0, initial=0.0),
-        )
-        done = (
-            (mu < 1e-10 * y_scale)
-            & (prim < 1e-9 * y_scale)
-            & (dual < 1e-8 * y_scale)
-            & (box < 1e-8)
-        )
-        if done.all():
-            break
-        if np.all(done | (mu > 0.9 * mu_prev)):
-            stall += 1
-            if stall >= 5:
-                break
-        else:
-            stall = 0
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            Wd = u / zu + v / zv
-        Wd = np.where(np.isfinite(Wd), Wd, 1e14)
-        np.clip(Wd, 1e-12, 1e14, out=Wd)
-        Dinv = 1.0 / Wd
-        Hj = np.einsum("tp,tj,tq->jpq", U0, Dinv, U0, optimize=True)
-        Hj += Qw2[None, :, :]
-        Hj[:, eye_r, eye_r] += 1e-12 * (
-            1.0 + Hj[:, eye_r, eye_r].max(axis=1)[:, None]
-        )
-
-        def newton(tu, tv):
-            g = (
-                -r_p
-                - (tu - u * zu + u * Fu) / zu
-                + (tv - v * zv + v * Fv) / zv
-            )
-            rhs = -r_dc + U0.T @ (Dinv * g)
-            try:
-                dc = np.linalg.solve(Hj, rhs.T[:, :, None])[:, :, 0].T
-            except np.linalg.LinAlgError:
-                Hj2 = Hj.copy()
-                Hj2[:, eye_r, eye_r] += 1e-6 * (
-                    1.0 + Hj2[:, eye_r, eye_r].max(axis=1)[:, None]
-                )
-                dc = np.linalg.solve(Hj2, rhs.T[:, :, None])[:, :, 0].T
-            dd = Dinv * (g - U0 @ dc)
-            dzu = -Fu - dd
-            dzv = -Fv + dd
-            du = (tu - u * zu - u * dzu) / zu
-            dv = (tv - v * zv - v * dzv) / zv
-            return dc, dd, du, dv, dzu, dzv
-
-        def steplen(x, dx):
-            with np.errstate(divide="ignore", invalid="ignore"):
-                rr = np.where(dx < 0, -x / dx, np.inf)
-            return np.minimum(1.0, 0.99 * rr.min(axis=0, initial=np.inf))
-
-        zero = np.zeros((T, J))
-        dc_a, dd_a, du_a, dv_a, dzu_a, dzv_a = newton(zero, zero)
-        ap = np.minimum(steplen(u, du_a), steplen(v, dv_a))
-        ad = np.minimum(steplen(zu, dzu_a), steplen(zv, dzv_a))
-        mu_aff = (
-            (u + ap * du_a) * (zu + ad * dzu_a)
-            + (v + ap * dv_a) * (zv + ad * dzv_a)
-        ).sum(axis=0) / (2.0 * nm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sigma = np.where(mu > 0, (mu_aff / np.maximum(mu, 1e-300)) ** 3, 0.0)
-        sigma = np.clip(sigma, 0.0, 1.0)
-        tgt = (sigma * mu)[None, :]
-        tu = tgt - du_a * dzu_a
-        tv = tgt - dv_a * dzv_a
-        dc, dd, du, dv, dzu, dzv = newton(tu, tv)
-        ap = np.minimum(steplen(u, du), steplen(v, dv))
-        ad = np.minimum(steplen(zu, dzu), steplen(zv, dzv))
-        ap = np.where(done, 0.0, ap)[None, :]
-        ad = np.where(done, 0.0, ad)[None, :]
-        C = C + ap * dc
-        u = u + ap * du
-        v = v + ap * dv
-        d = d + ad * dd
-        zu = zu + ad * dzu
-        zv = zv + ad * dzv
-
-    fits = U0 @ C
-    R = Y - fits
-    pin = np.where(R >= 0, tau_v[None, :] * R, (tau_v - 1.0)[None, :] * R)
-    obj = w0 * pin.sum(axis=0) + np.einsum("pj,pq,qj->j", C, Qw, C)
-    return fits, obj, C
+    return C
 
 
 # ---------------------------------------------------------------------------
@@ -1334,18 +1152,6 @@ def solve_l2_l1d2_constrained(
             x = cand
     obj = true_obj(x)
     return x, obj
-
-
-def _apply_d2t_d2_interior(T: int) -> np.ndarray:
-    """Interior (T-2)^2 block of D2.T @ D2, assembled from its stencil."""
-    # accumulate sum_r outer(row_r, row_r) over the D2 stencil rows
-    # (e_r - 2 e_{r+1} + e_{r+2}) without materializing dense D2
-    A = np.zeros((T, T))
-    rows = np.arange(T - 2)
-    for o1, c1 in ((0, 1.0), (1, -2.0), (2, 1.0)):
-        for o2, c2 in ((0, 1.0), (1, -2.0), (2, 1.0)):
-            np.add.at(A, (rows + o1, rows + o2), c1 * c2)
-    return A[1:-1, 1:-1]
 
 
 def _polish_l1d2_breakpoints(y, z, w0, w1, tol):

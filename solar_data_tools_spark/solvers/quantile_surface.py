@@ -8,9 +8,10 @@ yearly (day-of-year) — on a product Fourier basis, fitting levels
 sequentially from low to high with a non-crossing clip (the reference
 fits sequentially per level the same way).
 
-Each level is one IRLS pinball regression on the product basis — a few
-hundred features at most, per-site data of (days x nvals) rows; the whole
-fleet runs as one grouped-map pass.
+Each level is one penalty-free pinball regression on the product basis
+(``solvers.exact.pinball_regression``, the interior-point solver every
+pinball fit in the package uses) — a few dozen features, per-site data
+of (days x nvals) rows; the whole fleet runs as one grouped-map pass.
 """
 
 from __future__ import annotations
@@ -53,9 +54,7 @@ def fit_quantile_surface(
 ) -> dict[float, np.ndarray]:
     """Sequential non-crossing quantile fits; returns level -> fitted
     values aligned with the inputs."""
-    from solar_data_tools_spark.solvers.decompositions import (
-        quantile_regression_irls,
-    )
+    from solar_data_tools_spark.solvers.exact import pinball_regression
 
     X = product_basis(dil_slot, doy, nvals, daily_harmonics, yearly_harmonics)
     mask = np.isfinite(values)
@@ -65,7 +64,7 @@ def fit_quantile_surface(
         if mask.sum() < X.shape[1] + 1:
             fit = np.full(len(values), np.nan)
         else:
-            beta = quantile_regression_irls(X[mask], values[mask], tau=tau)
+            beta = pinball_regression(X[mask], values[mask], tau=tau)
             fit = X @ beta
             if prev is not None:
                 fit = np.maximum(fit, prev)  # non-crossing

@@ -455,13 +455,11 @@ def test_run_pipeline_end_to_end(spark, sf_small):
 
 # -------------------------------------------------------------------- solver
 def test_quantile_regression_recovers_seasonal_quantile():
-    """IRLS pinball fit on a Fourier basis: residuals must split
-    approximately tau / (1-tau) around the fit (the defining property of a
-    quantile fit)."""
+    """Pinball (interior-point) fit on a Fourier basis: residuals must
+    split approximately tau / (1-tau) around the fit (the defining
+    property of a quantile fit)."""
     from solar_data_tools_spark.solvers.basis import fourier_basis
-    from solar_data_tools_spark.solvers.decompositions import (
-        quantile_regression_irls,
-    )
+    from solar_data_tools_spark.solvers.exact import pinball_regression
 
     rng = np.random.default_rng(7)
     n = 730
@@ -470,7 +468,7 @@ def test_quantile_regression_recovers_seasonal_quantile():
     y = season + rng.normal(0, 0.5, n)
     X = fourier_basis(t, num_harmonics=3)
     for tau in (0.5, 0.9):
-        beta = quantile_regression_irls(X, y, tau=tau)
+        beta = pinball_regression(X, y, tau=tau)
         frac_below = float(np.mean(y <= X @ beta))
         assert abs(frac_below - tau) < 0.05, (tau, frac_below)
 

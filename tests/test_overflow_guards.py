@@ -56,6 +56,47 @@ def test_tick_sum_normal_values_unaffected(spark):
     assert [(r["s"], r["a"]) for r in out] == [(3.75, 1.875), (3.125, 3.125)]
 
 
+def test_tick_string_paths_match_column_paths(spark):
+    """A string input to tick_sum/tick_avg takes the one-parse SQL path:
+    a bare identifier is a column name, anything else a SQL fragment.
+    Both must give exactly the Column path's values and guard."""
+    df = spark.createDataFrame(
+        [
+            (1, 1.25, 0.5), (1, -2.0000005, 1.0), (1, None, 2.0),
+            (2, 3.1234565, -0.25), (2, 1e-7, None), (3, None, None),
+        ],
+        "g int, v double, w double",
+    )
+    pairs = {
+        "v": F.col("v"),
+        "v * 2 - w": F.col("v") * 2 - F.col("w"),
+        "abs(v) + 0.1": F.abs(F.col("v")) + 0.1,
+    }
+    aggs = []
+    for i, (frag, col) in enumerate(pairs.items()):
+        for digits in (0, 3, 6):
+            for fn in (tick_sum, tick_avg):
+                tag = f"{fn.__name__}_{i}_{digits}"
+                aggs += [
+                    fn(frag, digits).alias(f"{tag}_str"),
+                    fn(col, digits).alias(f"{tag}_col"),
+                ]
+    rows = df.groupBy("g").agg(*aggs).orderBy("g").collect()
+    assert len(rows) == 3
+    for r in rows:
+        d = r.asDict()
+        for name in d:
+            if name.endswith("_str"):
+                assert d[name] == d[name[:-4] + "_col"], (r["g"], name)
+
+    big = spark.createDataFrame(
+        [(1, 5.0e12), (1, -5.0e12)], "g int, v double"
+    )
+    for arg in ("v", "v + 0", F.col("v")):
+        with pytest.raises(Exception, match="overflow guard"):
+            big.groupBy("g").agg(tick_sum(arg, 6).alias("s")).collect()
+
+
 def test_dsir_logw_fp_guard_fires_on_planted_extreme(spark):
     """The DSIR weighted-count sum carries the same guard: a planted
     feature table with ~2^62-scale cnt*lr_fp terms must error, not

@@ -58,6 +58,64 @@ def test_d1_separates_pwc_from_seasonal():
     assert corr > 0.95, corr
 
 
+def test_tl1_batch_matches_single_fits():
+    """J batched D2 columns against J separate single-series fits: mixed
+    tau, a different use mask per column, and one series that starts at
+    a day offset on the shared axis (the phase invariance that
+    ``fit_seasonal_quantile`` relies on when it stacks sites onto one
+    global day axis)."""
+    from solar_data_tools_spark.solvers.exact import (
+        solve_tl1_l2d2p365,
+        solve_tl1_l2d2p365_batch,
+    )
+
+    rng = np.random.default_rng(0)
+    T, off, n_off = 800, 170, 500
+
+    def series(n, start):
+        t = np.arange(n) + start
+        w = 2 * np.pi * t / 365.2425
+        return 5.0 + 2.0 * np.sin(w) + 0.5 * np.cos(2 * w) + rng.normal(0, 0.4, n)
+
+    y0, use0 = series(T, 0), rng.random(T) < 0.8
+    y1 = series(T, 0)
+    y1[rng.random(T) < 0.1] = np.nan
+    y2, use2 = series(n_off, off), rng.random(n_off) < 0.9
+    y3, use3 = series(T, 0), np.ones(T, dtype=bool)
+    use3[300:420] = False
+    taus = np.array([0.1, 0.5, 0.9, 0.75])
+
+    Y = np.full((T, 4), np.nan)
+    U = np.ones((T, 4), dtype=bool)
+    Y[:, 0], U[:, 0] = y0, use0
+    Y[:, 1] = y1
+    Y[off : off + n_off, 2], U[off : off + n_off, 2] = y2, use2
+    Y[:, 3], U[:, 3] = y3, use3
+    S, obj = solve_tl1_l2d2p365_batch(Y, taus, use_ixs=U)
+
+    singles = [
+        solve_tl1_l2d2p365(y0, taus[0], use_ixs=use0),
+        solve_tl1_l2d2p365(y1, taus[1]),
+        solve_tl1_l2d2p365(y2, taus[2], use_ixs=use2),
+        solve_tl1_l2d2p365(y3, taus[3], use_ixs=use3),
+    ]
+    rows = [slice(None), slice(None), slice(off, off + n_off), slice(None)]
+    y_scale = float(np.nanmax(np.abs(Y)))
+    for j, ((s_j, o_j), r) in enumerate(zip(singles, rows)):
+        assert abs(obj[j] - o_j) < 1e-8 * max(1.0, abs(o_j)), (j, obj[j], o_j)
+        # The batch shares one stopping scale and one stall rule across
+        # its columns, so a column can stop a few iterations away from
+        # where it stops alone; on this nearly flat objective that moves
+        # the fitted values by up to ~1e-7 relative (1e-10 in objective).
+        gap = np.max(np.abs(S[r, j] - s_j))
+        assert gap < 1e-5 * y_scale, (j, gap)
+
+    # the offset column alone on the shared axis equals its local-axis fit
+    S2, obj2 = solve_tl1_l2d2p365_batch(Y[:, 2:3], taus[2], use_ixs=U[:, 2:3])
+    assert np.max(np.abs(S2[off : off + n_off, 0] - singles[2][0])) < 1e-8
+    assert abs(obj2[0] - singles[2][1]) < 1e-8 * abs(singles[2][1])
+
+
 def test_d4_cdf_fit_is_piecewise_linear_with_endpoints():
     from solar_data_tools_spark.solvers.decompositions import l2_l1d2_constrained_fit
 
