@@ -10,7 +10,8 @@ The per-series wrappers below (D1 ``l2_l1d1_l2d2p365``, D2
 ``tl1_l2d2p365``, D4 ``l2_l1d2_constrained``) guard short or degenerate
 inputs and delegate to the fixture-validated exact solvers; the fleet
 form of D2 (``fit_seasonal_quantile``) batches a partition's sites into
-one interior-point solve.
+one interior-point solve, and the D1 grid form
+(``l2_l1d1_l2d2p365_grid_fit``) fits a site's whole w1 grid in one.
 """
 
 from __future__ import annotations
@@ -70,21 +71,41 @@ def l2_l1d1_l2d2p365_fit(
 
     Parity target: ``l2_l1d1_l2d2p365`` (signal_decompositions.py:45-124):
     l2 residual + l1-of-first-diff (piecewise constant, weight w1) +
-    smooth periodic seasonal. Delegates to the exact ADMM + support-polish
-    solver (``solvers.exact``), fixture-validated against the reference's
-    published outputs (tests/test_solver_fixtures.py).
+    smooth periodic seasonal. The one-weight call of
+    :func:`l2_l1d1_l2d2p365_grid_fit`.
 
     Returns (pwc, seasonal); NaNs in y are masked out of both fits.
     """
-    from solar_data_tools_spark.solvers.exact import solve_l2_l1d1_l2d2p365
+    pwc, seasonal = l2_l1d1_l2d2p365_grid_fit(
+        y, [w1], num_harmonics=num_harmonics, period=period
+    )
+    return pwc[:, 0], seasonal[:, 0]
+
+
+def l2_l1d1_l2d2p365_grid_fit(
+    y: np.ndarray,
+    w1_grid,
+    num_harmonics: int = 3,
+    period: float = 365.2425,
+) -> tuple[np.ndarray, np.ndarray]:
+    """D1 at every weight of ``w1_grid`` as one batched solve
+    (``solvers.exact.solve_l2_l1d1_l2d2p365_batch``: the interior-point
+    core + support polish, fixture-validated against the reference's
+    published outputs in tests/test_solver_fixtures.py).
+
+    Returns (pwc, seasonal), each (len(y), len(w1_grid)); all NaN when
+    ``y`` has too few finite values to fit.
+    """
+    from solar_data_tools_spark.solvers.exact import (
+        solve_l2_l1d1_l2d2p365_batch,
+    )
 
     y = np.asarray(y, dtype=np.float64)
-    n = len(y)
-    mask = np.isfinite(y)
-    if mask.sum() < 2 * num_harmonics + 3:
-        return np.full(n, np.nan), np.full(n, np.nan)
-    s_hat, s_seas, _obj = solve_l2_l1d1_l2d2p365(
-        y, w1=w1, num_harmonics=num_harmonics, period=period
+    shape = (len(y), len(w1_grid))
+    if np.isfinite(y).sum() < 2 * num_harmonics + 3:
+        return np.full(shape, np.nan), np.full(shape, np.nan)
+    s_hat, s_seas, _obj = solve_l2_l1d1_l2d2p365_batch(
+        y, w1_grid, num_harmonics=num_harmonics, period=period
     )
     return s_hat, s_seas
 

@@ -21,14 +21,16 @@ statements — NOT a code port):
 ``tl1_l2d2p365`` is a penalized quantile regression and is solved by
 ``_pinball_ipm``, a batched Mehrotra interior-point method that is also
 the package's only other pinball solver (``pinball_regression``: the
-loss-factor envelope and the D7 quantile surface). The other three are
-solved with over-relaxed ADMM followed by a support-pattern "polish"
-solve (an equality-constrained QP on the detected sparsity pattern),
-which recovers the interior-point optimum to high accuracy. All four are
-validated against the reference's own fixture files in
-``tests/test_solver_fixtures.py`` at the reference's tolerances
-(MAE < 1e-3, objective to 1 decimal; see reference
-tests/solardatatools/test_signal_decompositions.py:57-61).
+loss-factor envelope and the D7 quantile surface). ``l2_l1d1_l2d2p365``
+and ``l1_pwc_smoothper_trend`` share ``_tv_ipm``, a batched interior-
+point core whose Newton step is a tridiagonal system plus a small
+border, finished by a support polish (an exact re-solve on the detected
+jump pattern, which makes the piecewise-constant part exactly constant
+between jumps). ``l2_l1d2_constrained`` is solved with over-relaxed ADMM
+and a breakpoint polish. All four are validated against the reference's
+own fixture files in ``tests/test_solver_fixtures.py`` at the
+reference's tolerances (MAE < 1e-3, objective to 1 decimal; see
+reference tests/solardatatools/test_signal_decompositions.py:57-61).
 
 The harmonic penalty constant is the reference's published regularization:
 weight^2 * (2*pi*k)^2 / (2*period) per (sin, cos) pair — the square of
@@ -36,8 +38,10 @@ weight^2 * (2*pi*k)^2 / (2*period) per (sin, cos) pair — the square of
 _cvx_signal_decompositions.py:269-276), intercept unpenalized.
 
 Scale note: these run per site inside ``applyInPandas`` on daily-level
-series (365 * years points, <= a few thousand). Per-solve cost is a few
-hundred ms of dense numpy; the fleet dimension is Spark's.
+series (365 * years points, <= a few thousand). A D1 or D3 Newton step
+costs O(T k^2) with cyclic reduction (~log2 T vectorized steps) for the
+tridiagonal part, so a one-year fit takes ~10-50 ms and a site's whole
+w1 grid is one batched solve; the fleet dimension is Spark's.
 """
 
 from __future__ import annotations
@@ -94,14 +98,6 @@ def harmonic_penalty(num_harmonics: int, weight: float,
     return np.array(vals)
 
 
-def _diff1(n: int) -> np.ndarray:
-    D = np.zeros((n - 1, n))
-    idx = np.arange(n - 1)
-    D[idx, idx] = -1.0
-    D[idx, idx + 1] = 1.0
-    return D
-
-
 def _soft(v: np.ndarray, k) -> np.ndarray:
     return np.sign(v) * np.maximum(np.abs(v) - k, 0.0)
 
@@ -123,6 +119,277 @@ def _admm_converged(r_prim: np.ndarray, z_step: np.ndarray, rho: float,
 
 
 # ---------------------------------------------------------------------------
+# D1 / D3 core: data term + weighted l1 of first differences + a border
+# ---------------------------------------------------------------------------
+
+# Iteration cap of _tv_ipm. Fits converge in 5-25 iterations; a column
+# that reaches the cap without meeting its gap raises in the public
+# solvers unless its support polish passes the KKT check.
+_TV_IPM_MAX_ITERS = 100
+
+
+def _diff(x: np.ndarray, wrap: bool) -> np.ndarray:
+    """D x along axis 0: the first differences, plus x[0] - x[-1] as a
+    last row when ``wrap``."""
+    dx = x[1:] - x[:-1]
+    return np.concatenate([dx, x[:1] - x[-1:]]) if wrap else dx
+
+
+def _diff_t(d: np.ndarray, n: int, wrap: bool) -> np.ndarray:
+    """D' d for the operator of :func:`_diff` on length-n signals."""
+    out = np.zeros((n,) + d.shape[1:])
+    out[:-1] -= d[: n - 1]
+    out[1:] += d[: n - 1]
+    if wrap:
+        out[0] += d[-1]
+        out[-1] -= d[-1]
+    return out
+
+
+def _cr_factor(a: np.ndarray, o: np.ndarray):
+    """Cyclic-reduction factorization of the symmetric positive definite
+    tridiagonal matrices with diagonal ``a`` (n, J) and off-diagonal
+    ``o`` (n-1, J), one per column. Each level eliminates the odd rows
+    (Gaussian elimination in odd-even order), so a solve is ~log2(n)
+    vectorized steps instead of a sweep of n. An even-length level is
+    padded with a decoupled unit row, dropped again after the level."""
+    levels = []
+    while len(a) > 1:
+        m = len(a)
+        if m % 2 == 0:
+            a = np.concatenate([a, np.ones_like(a[:1])])
+            o = np.concatenate([o, np.zeros_like(o[:1])])
+        ao, oL, oR = a[1::2], o[0::2], o[1::2]
+        fL, fR = oL / ao, oR / ao
+        a_e = a[0::2].copy()
+        a_e[:-1] -= oL * fL
+        a_e[1:] -= oR * fR
+        # pivot floor: where huge difference weights swamp the data
+        # curvature, elimination can cancel a pivot to 0 in rounding
+        a_e = np.maximum(a_e, 1e-14 * a[0::2])
+        levels.append((m, ao, oL, oR, fL, fR))
+        k = (m + 1) // 2
+        a, o = a_e[:k], (-oL * fR)[: k - 1]
+    return levels, a
+
+
+def _cr_solve(fac, R: np.ndarray) -> np.ndarray:
+    """Solve for the right-hand sides R (n, J, r) with the factors of
+    :func:`_cr_factor`."""
+    levels, a_last = fac
+    odd = []
+    for m, _ao, _oL, _oR, fL, fR in levels:
+        if m % 2 == 0:
+            R = np.concatenate([R, np.zeros_like(R[:1])])
+        Ro, R = R[1::2], R[0::2].copy()
+        R[:-1] -= fL[:, :, None] * Ro
+        R[1:] -= fR[:, :, None] * Ro
+        odd.append(Ro)
+        R = R[: (m + 1) // 2]
+    X = R / a_last[:, :, None]
+    for (m, ao, oL, oR, _fL, _fR), Ro in zip(reversed(levels), reversed(odd)):
+        if m % 2 == 0:
+            X = np.concatenate([X, np.zeros_like(X[:1])])
+        out = np.empty((2 * len(X) - 1,) + X.shape[1:])
+        out[0::2] = X
+        out[1::2] = (Ro - oL[:, :, None] * X[:-1] - oR[:, :, None] * X[1:]) / ao[:, :, None]
+        X = out[:m]
+    return X
+
+
+def _tv_ipm(Y0, M, B, Q, w, n, wrap=False, l1_weight=None):
+    """The D1/D3 solver: for every column of ``Y0`` (T, J), using only
+    the rows where the mask ``M`` (T, J) is true (``Y0`` is 0 elsewhere),
+
+        min  data(y - x[t % n] - B th) + sum_i w_i |(D x)_i| + th' Q th
+
+    over x (n) and the border th (k); the data term is sum (.)^2, or
+    ``l1_weight`` * sum |.|. D x is :func:`_diff` and ``w`` (rows of
+    D x, J) its positive weights.
+
+    A batched Mehrotra predictor-corrector interior-point method. Each
+    l1 term sum c|a| is split as a = p - m (p, m >= 0, dual d), and each
+    Newton step eliminates (p, m) and their duals: what is left is
+    diag(data curvature) + D' diag D, tridiagonal in x, bordered by th
+    and one column for the wrap row — cyclic reduction plus a small
+    Schur complement, no dense (n + k)^2 matrix. Each column stops on
+    its own duality gap and residuals, scaled by its own data, and is
+    frozen when its gap stalls, so it does not depend on its batch-mates.
+    Returns (x (n, J), th (k, J), D x, residual y - fit on M, converged).
+    """
+    T, J = Y0.shape
+    k = B.shape[1]
+    l1 = l1_weight is not None
+    Mf = M.astype(np.float64)
+    reps = -(-T // n)
+    y_scale = np.maximum(1.0, np.abs(Y0).max(axis=0, initial=0.0))
+
+    def fold(v):  # (T, ...) -> (n, ...): sum over t % n
+        pad = np.zeros((reps * n - T,) + v.shape[1:])
+        return v if n == T else np.concatenate([v, pad]).reshape(
+            (reps, n) + v.shape[1:]).sum(axis=0)
+
+    def unfold(v):  # (n, ...) -> (T, ...)
+        return v if n == T else np.concatenate([v] * reps)[:T]
+
+    def resid_of(x, th):
+        return Mf * (Y0 - unfold(x) - B @ th)
+
+    nb = k + int(wrap)
+    Wx = np.zeros((n, J, nb))
+    if wrap:
+        Wx[0, :, k], Wx[-1, :, k] = 1.0, -1.0
+    Eb = np.zeros((J, nb, nb))
+
+    def factor(h, g):
+        """The Newton matrix for data curvature h (T, J) and curvature g
+        of the difference rows, as its tridiagonal factor, A^-1 W and
+        the Schur complement of the border."""
+        a = fold(h).copy()
+        a[:-1] += g[: n - 1]
+        a[1:] += g[: n - 1]
+        cr = _cr_factor(a, -g[: n - 1])
+        Wx[:, :, :k] = fold(h[:, :, None] * B[:, None, :])
+        Eb[:, :k, :k] = np.einsum("tk,tj,tl->jkl", B, h, B, optimize=True) + 2.0 * Q
+        if wrap:  # the wrap row's g (vv') enters as a bordered auxiliary
+            Eb[:, k, k] = -1.0 / g[-1]
+        AW = _cr_solve(cr, Wx)
+        return cr, AW, Eb - np.einsum("njk,njl->jkl", Wx, AW, optimize=True)
+
+    def solve(fac, rx, rth):
+        cr, AW, S = fac
+        Ar = _cr_solve(cr, rx[:, :, None])[:, :, 0]
+        rb = np.pad(rth.T, ((0, 0), (0, nb - k))) - np.einsum("njk,nj->jk", Wx, Ar)
+        db = np.linalg.solve(S, rb[:, :, None])[:, :, 0]
+        return Ar - np.einsum("njk,jk->nj", AW, db), db[:, :k].T
+
+    def split(a, c, mask):  # the l1 term sum c |a| on mask, as a = p - m
+        pad = 0.1 * y_scale
+        return {
+            "p": np.where(mask, np.maximum(a, 0.0) + pad, 1.0),
+            "m": np.where(mask, np.maximum(-a, 0.0) + pad, 1.0),
+            "zp": np.where(mask, c, 1.0), "zm": np.where(mask, c, 1.0),
+            "d": np.zeros(a.shape), "c": c, "M": mask.astype(np.float64),
+        }
+
+    def lin_part(s, tp, tm):  # eliminate (p, m, zp, zm) for targets tp, tm
+        ap = s["M"] * (tp - s["p"] * s["zp"] + s["p"] * s["Fp"]) / s["zp"]
+        am = s["M"] * (tm - s["m"] * s["zm"] + s["m"] * s["Fm"]) / s["zm"]
+        return ap, am, s["r"] - ap + am
+
+    def back(s, ap, am, gt, da):  # recover them from the step da of a
+        dd = s["g"] * (da + gt)
+        return {"p": ap + s["p"] / s["zp"] * dd, "m": am - s["m"] / s["zm"] * dd,
+                "zp": s["M"] * (-s["Fp"] - dd), "zm": s["M"] * (-s["Fm"] + dd),
+                "d": dd}
+
+    def step(dirs):
+        a = np.full(J, np.inf)
+        for s, ds in zip(blocks, dirs):
+            for key in ("p", "m", "zp", "zm"):
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    rr = np.where(ds[key] < 0, -s[key] / ds[key], np.inf)
+                a = np.minimum(a, rr.min(axis=0))
+        return np.minimum(1.0, 0.99 * a)
+
+    def comp_after(dirs, a):
+        return sum((s["M"] * ((s["p"] + a * ds["p"]) * (s["zp"] + a * ds["zp"])
+                              + (s["m"] + a * ds["m"]) * (s["zm"] + a * ds["zm"])
+                              )).sum(axis=0) for s, ds in zip(blocks, dirs))
+
+    # warm start: the fit with the l1 terms replaced by unit quadratics
+    h = Mf if l1 else 2.0 * Mf
+    x, th = solve(factor(h, np.ones(w.shape)), fold(h * Y0), B.T @ (h * Y0))
+    blocks = [split(_diff(x, wrap), w, np.ones(w.shape, dtype=bool))]
+    if l1:
+        blocks.append(split(resid_of(x, th), l1_weight, M))
+    n_comp = sum(s["M"].sum(axis=0) for s in blocks)
+
+    done = frozen = np.zeros(J, dtype=bool)
+    stall, mu_prev = np.zeros(J, dtype=np.int64), np.full(J, np.inf)
+    for _ in range(_TV_IPM_MAX_ITERS):
+        resid = resid_of(x, th)
+        Dx = _diff(x, wrap)
+        for s, a in zip(blocks, [Dx, resid]):
+            s["r"] = s["M"] * (a - s["p"] + s["m"])
+            s["Fp"] = s["M"] * (s["zp"] - s["c"] + s["d"])
+            s["Fm"] = s["M"] * (s["zm"] - s["c"] - s["d"])
+            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+                g = 1.0 / (s["p"] / s["zp"] + s["m"] / s["zm"])
+            # clamp: converging columns drive the weights to 0 or inf, and
+            # one degenerate column would make the batched solve raise
+            s["g"] = s["M"] * np.clip(np.where(np.isfinite(g), g, 1e14), 1e-14, 1e14)
+        gfit = -blocks[1]["M"] * blocks[1]["d"] if l1 else -2.0 * resid
+        r_x = fold(gfit) + _diff_t(blocks[0]["d"], n, wrap)
+        r_th = B.T @ gfit + 2.0 * Q @ th
+        comp = sum((s["M"] * (s["p"] * s["zp"] + s["m"] * s["zm"])).sum(axis=0)
+                   for s in blocks)
+        prim = np.max([np.abs(s["r"]).max(axis=0) for s in blocks], axis=0)
+        dual = np.max([np.abs(r_x).max(axis=0), np.abs(r_th).max(axis=0)]
+                      + [np.abs(s[f]).max(axis=0) for s in blocks for f in ("Fp", "Fm")],
+                      axis=0)
+        pobj = ((l1_weight * np.abs(resid) if l1 else resid ** 2).sum(axis=0)
+                + (w * np.abs(Dx)).sum(axis=0) + np.einsum("kj,kl,lj->j", th, Q, th))
+        mu = comp / n_comp
+        done = ((comp <= 1e-9 * (1.0 + np.abs(pobj)))
+                & (prim <= 1e-9 * y_scale) & (dual <= 1e-9 * y_scale))
+        stall = np.where(~done & (mu > 0.9 * mu_prev), stall + 1, 0)
+        frozen = frozen | (stall >= 5)
+        mu_prev = mu
+        if np.all(done | frozen):
+            break
+
+        h = blocks[1]["g"] if l1 else 2.0 * Mf
+        fac = factor(h, blocks[0]["g"])
+
+        def direction(targets):
+            parts = [lin_part(s, *t) for s, t in zip(blocks, targets)]
+            rx = -r_x - _diff_t(blocks[0]["g"] * parts[0][2], n, wrap)
+            rth = -r_th
+            if l1:
+                hg = h * parts[1][2]
+                rx, rth = rx + fold(hg), rth + B.T @ hg
+            dx, dth = solve(fac, rx, rth)
+            das = [_diff(dx, wrap), -Mf * (unfold(dx) + B @ dth)]
+            return dx, dth, [back(s, *pt, da) for s, pt, da in zip(blocks, parts, das)]
+
+        _dx, _dth, aff = direction([(0.0, 0.0)] * len(blocks))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sigma = np.clip((comp_after(aff, step(aff)) / comp) ** 3, 0.0, 1.0)
+        tgt = np.where(np.isfinite(sigma), sigma, 0.0) * mu
+        dx, dth, cor = direction([
+            (s["M"] * (tgt - a["p"] * a["zp"]), s["M"] * (tgt - a["m"] * a["zm"]))
+            for s, a in zip(blocks, aff)])
+        alpha = np.where(done | frozen, 0.0, step(cor))
+        x, th = x + alpha * dx, th + alpha * dth
+        for s, ds in zip(blocks, cor):
+            for key in ("p", "m", "zp", "zm", "d"):
+                s[key] = s[key] + alpha * ds[key]
+    return x, th, _diff(x, wrap), resid_of(x, th), done
+
+
+def _plateaus(active: np.ndarray, cnt: np.ndarray, wrap: bool):
+    """Plateaus of a level x (n) whose nonzero differences (rows of
+    :func:`_diff`) are ``active``: (seg, Q), seg[i] the plateau of x[i]
+    and Q (plateaus, K) each plateau's level in terms of the K holding
+    data (``cnt`` > 0) — its own, or for a plateau without data the
+    linear interpolation between its data neighbours (the monotone ramp
+    an interior-point method converges to across a gap), constant at
+    either end. None when no plateau holds data."""
+    n = len(cnt)
+    seg = np.concatenate([[0], np.cumsum(active[: n - 1])])
+    if wrap and not active[-1]:
+        seg[seg == seg[-1]] = 0
+    nseg = int(seg.max()) + 1
+    obs = np.flatnonzero(np.bincount(seg, weights=cnt, minlength=nseg) > 0)
+    if len(obs) == 0:
+        return None
+    Q = np.stack([np.interp(np.arange(nseg), obs, e)
+                  for e in np.eye(len(obs))], axis=1)
+    return seg, Q
+
+
+# ---------------------------------------------------------------------------
 # D1: l2_l1d1_l2d2p365
 # ---------------------------------------------------------------------------
 
@@ -134,175 +401,174 @@ def solve_l2_l1d1_l2d2p365(
     yearly_periodic: bool = False,
     num_harmonics: int = 3,
     period: float = PERIOD_DAYS,
-    admm_iters: int = 4000,
-    rho: float | None = None,
     transition_locs: np.ndarray | None = None,
 ):
     """Minimize  sum_use (y - B th - x)^2 + w1 ||D1 x||_1 + th' Q th
     s.t. mean(B th) = 0 over the full index, optionally x 365-periodic.
 
-    ``rho`` defaults to max(1, w1/7.5): the scaled dual must reach w1/rho
-    to sustain an active jump, so a fixed rho makes convergence
-    arbitrarily slow as w1 grows (observed on the time-shift golden at
-    w1=75: 4000 iterations with rho=1 missed the planted jump entirely).
+    The J=1 call of :func:`solve_l2_l1d1_l2d2p365_batch`.
 
     With ``transition_locs`` the l1 term is replaced by a segment-basis
     constraint (x piecewise constant with breakpoints AT the given
     indices, reference _osd_signal_decompositions.py:106-118) and the
-    problem reduces to one equality-constrained least squares — no ADMM.
+    problem reduces to one equality-constrained least squares.
 
     Returns (s_hat, s_seas, obj).
     """
-    y = np.asarray(y, dtype=np.float64)
-    if rho is None:
-        rho = max(1.0, w1 / 7.5)
+    if transition_locs is None:
+        S_hat, S_seas, obj = solve_l2_l1d1_l2d2p365_batch(
+            y, [w1], w2=w2, use_ixs=use_ixs, yearly_periodic=yearly_periodic,
+            num_harmonics=num_harmonics, period=period,
+        )
+        return S_hat[:, 0], S_seas[:, 0], float(obj[0])
+    y, use, yc, B, q, N = _d1_setup(y, use_ixs, w2, num_harmonics, period)
     T = len(y)
+    locs = np.asarray(transition_locs, dtype=np.int64)
+    active = np.zeros(T - 1, dtype=bool)
+    active[locs[(locs > 0) & (locs < T)] - 1] = True
+    s_hat, phi = _plateau_lsq(yc, use, B @ N, (N.T * q) @ N, np.zeros(T),
+                              active, T, False)
+    th = N @ phi
+    s_seas = B @ th
+    e = (y - s_seas - s_hat)[use]
+    return s_hat, s_seas, float(np.sum(e**2) + th @ (q * th))
+
+
+def _d1_setup(y, use_ixs, w2, num_harmonics, period):
+    """D1's data, mask, basis, penalty, and an orthonormal basis N of
+    the null space of the mean-zero constraint c' th = 0 (c = B.sum(0)):
+    th = N phi fits the seasonal with that constraint built in."""
+    y = np.asarray(y, dtype=np.float64)
     use = np.isfinite(y)
     if use_ixs is not None:
         use &= np.asarray(use_ixs, dtype=bool)
-    yc = np.where(use, y, 0.0)
-
-    B = trig_basis(T, num_harmonics, period)
-    p = B.shape[1]
+    B = trig_basis(len(y), num_harmonics, period)
     q = harmonic_penalty(num_harmonics, w2, period) + 1e-12
-
-    if transition_locs is not None:
-        locs = np.asarray(transition_locs, dtype=np.int64)
-        bounds = np.r_[0, locs, T]
-        k = len(bounds) - 1
-        S = np.zeros((T, k))
-        for j in range(k):
-            S[bounds[j] : bounds[j + 1], j] = 1.0
-        X = np.hstack([B, S])[use]
-        nu = p + k
-        c = np.concatenate([B.sum(axis=0), np.zeros(k)])
-        K = np.zeros((nu + 1, nu + 1))
-        A2 = 2.0 * (X.T @ X)
-        A2[np.arange(p), np.arange(p)] += 2.0 * q
-        K[:nu, :nu] = A2 + 1e-12 * np.eye(nu)
-        K[:nu, nu] = c
-        K[nu, :nu] = c
-        rhs = np.zeros(nu + 1)
-        rhs[:nu] = 2.0 * (X.T @ yc[use])
-        sol = np.linalg.solve(K, rhs)
-        theta, zz = sol[:p], sol[p : p + k]
-        s_seas = B @ theta
-        s_hat = S @ zz
-        e = (y - s_seas - s_hat)[use]
-        obj = float(np.sum(e**2) + theta @ (q * theta))
-        return s_hat, s_seas, obj
-
-    # x parameterized as S @ xt; periodic ties day t to day t mod 365
-    if yearly_periodic and T > 365:
-        n = 365
-        S = np.zeros((T, n))
-        S[np.arange(T), np.arange(T) % 365] = 1.0
-    else:
-        n = T
-        S = np.eye(T)
-    D = _diff1(T) @ S  # (T-1) x n
-    m = D.shape[0]
-
-    nu = p + n
-    # data matrix rows on the use set: [B | S]
-    X = np.hstack([B, S])[use]
-    c = np.concatenate([B.sum(axis=0), np.zeros(n)])  # mean-zero on B th
-    G = np.hstack([np.zeros((m, p)), D])
-
-    A2 = 2.0 * (X.T @ X)
-    A2[np.arange(p), np.arange(p)] += 2.0 * q
-    K = np.zeros((nu + 1, nu + 1))
-    K[:nu, :nu] = A2 + rho * (G.T @ G)
-    K[:nu, nu] = c
-    K[nu, :nu] = c
-    Kinv = np.linalg.inv(K)
-    base_rhs = np.zeros(nu + 1)
-    base_rhs[:nu] = 2.0 * (X.T @ yc[use])
-    u0 = (Kinv @ base_rhs)[:nu]
-    Kg = Kinv[:nu, :nu] @ (rho * G.T)
-
-    y_scale = max(1.0, float(np.abs(yc).max()) if T else 1.0)
-    z = np.zeros(m)
-    s = np.zeros(m)
-    alpha = 1.8
-    u = u0.copy()
-    for it in range(admm_iters):
-        u = u0 + Kg @ (z - s)
-        Du = G[:, p:] @ u[p:]
-        Dh = alpha * Du + (1.0 - alpha) * z
-        z_prev = z
-        z = _soft(Dh + s, w1 / rho)
-        s += Dh - z
-        # converged when both ADMM residuals are tiny (checked cheaply each
-        # iter — every array here is already in hand); the support polish
-        # below recovers the exact optimum from the detected pattern.
-        if it % 25 == 24 and _admm_converged(Du - z, z - z_prev, rho,
-                                             tol=1e-8 * y_scale):
-            break
-
-    # support-pattern polish: fix zero pattern of D x, solve the resulting
-    # equality-constrained QP with the active-sign linear term exactly.
-    theta, xt, ok = _polish_l1d1(X, yc[use], q, c, D, z, w1, p, n)
-    if not ok:
-        theta, xt = u[:p], u[p:]
-        for it in range(4 * admm_iters):
-            u = u0 + Kg @ (z - s)
-            Du = G[:, p:] @ u[p:]
-            Dh = alpha * Du + (1.0 - alpha) * z
-            z_prev = z
-            z = _soft(Dh + s, w1 / rho)
-            s += Dh - z
-            if it % 25 == 24 and _admm_converged(Du - z, z - z_prev, rho,
-                                                 tol=1e-11 * y_scale):
-                break
-        theta2, xt2, ok2 = _polish_l1d1(X, yc[use], q, c, D, z, w1, p, n)
-        if ok2:
-            theta, xt = theta2, xt2
-        else:
-            theta, xt = u[:p], u[p:]
-
-    s_seas = B @ theta
-    s_hat = S @ xt
-    e = (y - s_seas - s_hat)[use]
-    obj = float(np.sum(e ** 2) + w1 * np.sum(np.abs(np.diff(s_hat)))
-                + theta @ (q * theta))
-    return s_hat, s_seas, obj
+    N = np.linalg.qr(B.sum(axis=0)[:, None], mode="complete")[0][:, 1:]
+    return y, use, np.where(use, y, 0.0), B, q, N
 
 
-def _polish_l1d1(X, yu, q, c, D, z, w1, p, n):
-    """Solve min ||X u - y||^2 + th'Qth + w1 * sgn' (D x)_A
-    s.t. (D x)_Ac = 0, c'u = 0 for the active pattern from z."""
-    tol = 1e-6 * max(1.0, np.abs(z).max() if len(z) else 1.0)
-    active = np.abs(z) > tol
-    sgn = np.sign(z[active])
-    Din = D[~active]
-    nu = p + n
-    neq = Din.shape[0] + 1
-    K = np.zeros((nu + neq, nu + neq))
-    A2 = 2.0 * (X.T @ X)
-    A2[np.arange(p), np.arange(p)] += 2.0 * q
-    K[:nu, :nu] = A2
-    E = np.zeros((neq, nu))
-    E[: Din.shape[0], p:] = Din
-    E[-1, :] = c
-    K[:nu, nu:] = E.T
-    K[nu:, :nu] = E
-    rhs = np.zeros(nu + neq)
-    lin = w1 * (D[active].T @ sgn)
-    rhs[:nu] = np.concatenate([2.0 * (X.T @ yu)[:p], 2.0 * (X.T @ yu)[p:] - lin])
+def solve_l2_l1d1_l2d2p365_batch(
+    y: np.ndarray,
+    w1,
+    w2: float = 1e-3,
+    use_ixs: np.ndarray | None = None,
+    yearly_periodic: bool = False,
+    num_harmonics: int = 3,
+    period: float = PERIOD_DAYS,
+):
+    """D1 for one series ``y`` (T,) at every weight in ``w1`` (J,) at
+    once (the time-shift w1 grid). Returns (S_hat, S_seas (T, J), obj).
+
+    :func:`_tv_ipm` fits every column (x per day, or per day of year when
+    ``yearly_periodic``); :func:`_polish_l1d1` re-solves each on its
+    detected support, so the piecewise-constant part is exactly constant
+    between jumps. A column that reaches the iteration cap without
+    meeting its gap raises ``RuntimeError`` unless its polish passes the
+    KKT check (``parallel.wrap_capture_errors``: a site error row).
+    """
+    y, use, yc, B, q, N = _d1_setup(y, use_ixs, w2, num_harmonics, period)
+    w1 = np.atleast_1d(np.asarray(w1, dtype=np.float64))
+    T, J = len(y), len(w1)
+    BN, QN = B @ N, (N.T * q) @ N
+    n = 365 if yearly_periodic and T > 365 else T
+    wrap = n < T
+    # an x difference weighs w1 times the number of day differences it is
+    mult = np.bincount(np.arange(T - 1) % n, minlength=n).astype(np.float64)
+    W = (mult if wrap else mult[: n - 1])[:, None] * w1[None, :]
+    X, PHI, DX, _resid, conv = _tv_ipm(
+        np.repeat(yc[:, None], J, axis=1), np.repeat(use[:, None], J, axis=1),
+        BN, QN, W, n, wrap=wrap,
+    )
+    t_ix = np.arange(T) % n
+    S_hat = np.empty((T, J))
+    S_seas = np.empty((T, J))
+    obj = np.empty(J)
+    for j in range(J):
+        x, phi, ok = _polish_l1d1(yc, use, BN, QN, W[:, j], DX[:, j], n, wrap)
+        if not ok:
+            if not conv[j]:
+                raise RuntimeError(
+                    f"l2_l1d1_l2d2p365: interior-point solve (w1={w1[j]:g}) "
+                    f"did not converge in {_TV_IPM_MAX_ITERS} iterations")
+            x, phi = X[:, j], PHI[:, j]
+        th = N @ phi
+        S_hat[:, j] = x[t_ix]
+        S_seas[:, j] = B @ th
+        e = (y - S_seas[:, j] - S_hat[:, j])[use]
+        obj[j] = (np.sum(e ** 2) + w1[j] * np.sum(np.abs(np.diff(S_hat[:, j])))
+                  + th @ (q * th))
+    return S_hat, S_seas, obj
+
+
+def _plateau_lsq(yc, use, B, Q, lin, active, n, wrap):
+    """min sum_use (y - x[t % n] - B th)^2 + th' Q th + lin' x over x
+    with one level per plateau of ``active`` (:func:`_plateaus`) and th.
+    Returns (x, th), or None when the system is singular."""
+    T, k = B.shape
+    t_ix = np.arange(T) % n
+    pl = _plateaus(active, np.bincount(t_ix, weights=use, minlength=n), wrap)
+    if pl is None:
+        return None
+    seg, P = pl
+    K = P.shape[1]
+    # on days with data the plateau map is one-hot: its data plateau
+    col = np.argmax(P[seg[t_ix[use]]], axis=1)
+    Bu, yu = B[use], yc[use]
+    LB = np.stack([np.bincount(col, weights=Bu[:, i], minlength=K)
+                   for i in range(k)], axis=1)
+    H = np.block([[np.diag(np.bincount(col, minlength=K).astype(float)), LB],
+                  [LB.T, Bu.T @ Bu + Q]])
+    rhs = np.concatenate([
+        np.bincount(col, weights=yu, minlength=K)
+        - 0.5 * P.T @ np.bincount(seg, weights=lin, minlength=len(P)),
+        Bu.T @ yu])
     try:
-        sol = np.linalg.solve(K, rhs)
+        sol = np.linalg.solve(H, rhs)
     except np.linalg.LinAlgError:
-        return None, None, False
-    u = sol[:nu]
-    lam = sol[nu:nu + Din.shape[0]]
-    Dx = D @ u[p:]
-    # KKT check: active signs must agree, inactive duals within [-w1, w1]
-    if np.any(np.sign(Dx[active]) * sgn < -1e-9):
-        return None, None, False
-    if Din.shape[0] and np.abs(lam).max() > w1 * (1.0 + 1e-4):
-        return None, None, False
-    return u[:p], u[p:], True
+        return None
+    return ((P @ sol[:K])[seg], sol[K:]) if np.all(np.isfinite(sol)) else None
+
+
+def _polish_l1d1(yc, use, B, Q, w, Dx, n, wrap):
+    """Support polish for D1: fix the zero pattern of the interior-point
+    D x, re-solve with the active signs' linear term exactly
+    (:func:`_plateau_lsq`) and check the KKT conditions of the full
+    problem. A weakly active difference (dual at its bound, value -> 0)
+    can flip sign in the re-solve: flipped ones leave the support,
+    inactive ones whose dual exceeds the weight join it, and the solve
+    repeats. Returns (x, th, ok)."""
+    T = B.shape[0]
+    tol = 1e-6 * max(1.0, float(np.abs(Dx).max(initial=0.0)))
+    sgn = np.sign(Dx) * (np.abs(Dx) > tol)
+    t_ix = np.arange(T) % n
+    x = th = None
+    for _ in range(4):
+        active = sgn != 0
+        fit = _plateau_lsq(yc, use, B, Q, _diff_t(w * sgn, n, wrap), active, n, wrap)
+        if fit is None:
+            break
+        x, th = fit
+        # the difference duals d from x-stationarity (grad_x f + D' d = 0)
+        g = np.bincount(t_ix, weights=2.0 * use * (x[t_ix] + B @ th - yc),
+                        minlength=n)
+        d = np.cumsum(g)[:-1]
+        if wrap:  # d on the cycle is fixed up to the wrap row's own dual
+            ac = active[:-1]
+            if active[-1]:
+                dw = w[-1] * sgn[-1]
+            elif ac.any():
+                dw = float(np.median((w[:-1] * sgn[:-1] - d)[ac]))
+            else:
+                dw = 0.5 * (max(-w[-1], np.max(-w[:-1] - d))
+                            + min(w[-1], np.min(w[:-1] - d)))
+            d = np.append(d + dw, dw)
+        over = ~active & (np.abs(d) > w * (1.0 + 1e-4) + 1e-9 * (1.0 + np.abs(g).sum()))
+        flipped = active & (_diff(x, wrap) * sgn < -1e-9 * (1.0 + tol))
+        if not (over.any() or flipped.any()):
+            return x, th, True
+        sgn = np.where(flipped, 0.0, np.where(over, np.sign(d), sgn))
+    return x, th, False
 
 
 # ---------------------------------------------------------------------------
@@ -469,7 +735,9 @@ def _pinball_ipm(U0, Qw, Y0, M, tau_v, w0=1.0):
     and each Newton step reduces — after eliminating (u, v, z_u, z_v) —
     to one r x r normal-equation solve per column with a diagonal
     weight, formed for all columns at once with a single einsum. A fit
-    converges in ~20-40 iterations; the loop is capped at 200.
+    converges in ~20-40 iterations; the loop is capped at 200. Each
+    column stops on its own scale (its largest |y|) and is frozen by its
+    own stall rule, so its fit does not depend on its batch-mates.
     """
     T, J = Y0.shape
     Mf = M.astype(np.float64)
@@ -477,7 +745,7 @@ def _pinball_ipm(U0, Qw, Y0, M, tau_v, w0=1.0):
     r = U0.shape[1]
     Qw2 = 2.0 * Qw
 
-    y_scale = max(1.0, float(np.abs(Y0).max()) if Y0.size else 1.0)
+    y_scale = np.maximum(1.0, np.abs(Y0).max(axis=0, initial=0.0))
     cu = (w0 * tau_v)[None, :]  # dual box: -cv <= d <= cu
     cv = (w0 * (1.0 - tau_v))[None, :]
 
@@ -496,8 +764,9 @@ def _pinball_ipm(U0, Qw, Y0, M, tau_v, w0=1.0):
 
     eye_r = np.arange(r)
     done = np.zeros(J, dtype=bool)
+    frozen = np.zeros(J, dtype=bool)
     mu = np.full(J, np.inf)
-    stall = 0
+    stall = np.zeros(J, dtype=np.int64)
     for _ in range(200):
         r_p = Mf * (U0 @ C + u - v - Y0)
         r_dc = Qw2 @ C - U0.T @ (Mf * d)
@@ -517,18 +786,13 @@ def _pinball_ipm(U0, Qw, Y0, M, tau_v, w0=1.0):
             & (dual < 1e-8 * y_scale)
             & (box < 1e-8)
         )
-        if done.all():
+        # stall freeze: a column whose complementarity stops shrinking is
+        # as converged as FP arithmetic allows (well below fixture
+        # tolerances); do not burn the remaining iteration budget on it
+        stall = np.where(~done & (mu > 0.9 * mu_prev), stall + 1, 0)
+        frozen |= stall >= 5
+        if np.all(done | frozen):
             break
-        # stall break: complementarity no longer shrinking on any active
-        # column — the iterate is as converged as FP arithmetic allows
-        # (well below fixture tolerances); do not burn the remaining
-        # iteration budget
-        if np.all(done | (mu > 0.9 * mu_prev)):
-            stall += 1
-            if stall >= 5:
-                break
-        else:
-            stall = 0
 
         with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
             Wd = u / zu + v / zv
@@ -595,8 +859,8 @@ def _pinball_ipm(U0, Qw, Y0, M, tau_v, w0=1.0):
         ap = np.minimum(steplen(u, du), steplen(v, dv))
         ad = np.minimum(steplen(zu, dzu), steplen(zv, dzv))
         # freeze converged columns
-        ap = np.where(done, 0.0, ap)[None, :]
-        ad = np.where(done, 0.0, ad)[None, :]
+        ap = np.where(done | frozen, 0.0, ap)[None, :]
+        ad = np.where(done | frozen, 0.0, ad)[None, :]
         C = C + ap * dc
         u = u + ap * du
         v = v + ap * dv
@@ -604,130 +868,6 @@ def _pinball_ipm(U0, Qw, Y0, M, tau_v, w0=1.0):
         zu = zu + ad * dzu
         zv = zv + ad * dzv
     return C
-
-
-# ---------------------------------------------------------------------------
-# interior-point QP (Mehrotra predictor-corrector)
-# ---------------------------------------------------------------------------
-
-def ipm_qp(P, q, G, h, max_iters=100, tol=1e-10, center_iters=0,
-           center_mu=1e-9):
-    """Minimize 1/2 v'Pv + q'v  s.t.  Gv <= h, by a standard primal-dual
-    predictor-corrector interior-point method (textbook Mehrotra).
-
-    Used where the l1 problem has a degenerate optimal face: the central
-    path converges to the face's analytic center, matching what a conic
-    interior-point solver (the reference's CLARABEL) returns, whereas
-    first-order methods pick an arbitrary face point.
-    """
-    n = len(q)
-    m = len(h)
-    v = np.zeros(n)
-    s = np.maximum(h - G @ v, 1.0)
-    z = np.ones(m)
-    # scale-aware stopping: the absolute tol alone never fires on
-    # problems whose natural scale is far from 1, so the loop used to
-    # burn all max_iters; per-LAPACK-call overhead (not flops) dominates
-    # at fleet-short series sizes, so each saved iteration matters
-    scale = max(
-        1.0,
-        float(np.abs(q).max(), ) if n else 1.0,
-        float(np.abs(h).max()) if m else 1.0,
-    )
-    # relative tolerance scales with the problem data; for scale ~1 it
-    # coincides with the caller's absolute tol (no silent loosening)
-    rtol = tol * scale
-    mu_prev = np.inf
-    stall = 0
-    for _ in range(max_iters):
-        r_d = P @ v + q + G.T @ z
-        r_p = G @ v + s - h
-        mu = s @ z / m
-        err = max(np.abs(r_d).max(), np.abs(r_p).max(), mu)
-        if err < max(tol, rtol):
-            break
-        # stall break: on a degenerate face mu stops contracting long
-        # before the tolerances fire; only valid once the iterate is
-        # already within a few orders of the requested tolerance — a
-        # mid-solve damped phase must keep iterating, not return garbage
-        if err < 1e3 * max(tol, rtol) and mu > 0.9 * mu_prev:
-            stall += 1
-            if stall >= 5:
-                break
-        else:
-            stall = 0
-        mu_prev = mu
-        w = z / s
-        H = P + (G.T * w) @ G
-        H[np.arange(n), np.arange(n)] += 1e-13 * (1.0 + np.trace(H) / n)
-        # one factorization per iteration, applied to both predictor and
-        # corrector rhs. Cholesky FIRST: it is the positive-definiteness
-        # detector (LU-based inv silently "succeeds" on an indefinite
-        # Hessian near convergence); the inverse is then computed from
-        # the (ridged, if needed) PD matrix — 2 LAPACK calls/iter vs the
-        # historical 5.
-        try:
-            np.linalg.cholesky(H)
-        except np.linalg.LinAlgError:
-            H = H + 1e-9 * np.trace(H) / n * np.eye(n)
-        Hinv = np.linalg.inv(H)
-
-        grad = P @ v + q
-
-        def solve_kkt(rc):
-            # Newton direction with complementarity rhs  z*ds + s*dz = rc - s*z
-            rhs = -grad - G.T @ (w * r_p + rc / s)
-            dv = Hinv @ rhs
-            ds = -r_p - G @ dv
-            dz = (rc - z * ds) / s - z
-            return dv, ds, dz
-
-        # affine (predictor) step
-        dv_a, ds_a, dz_a = solve_kkt(np.zeros(m))
-        a_p = min(1.0, *(0.999 * (-s[ds_a < 0] / ds_a[ds_a < 0])
-                         if np.any(ds_a < 0) else [1.0]))
-        a_d = min(1.0, *(0.999 * (-z[dz_a < 0] / dz_a[dz_a < 0])
-                         if np.any(dz_a < 0) else [1.0]))
-        mu_aff = (s + a_p * ds_a) @ (z + a_d * dz_a) / m
-        sigma = (mu_aff / mu) ** 3
-        # corrector
-        rc = sigma * mu - ds_a * dz_a
-        dv, ds, dz = solve_kkt(rc)
-        a_p = min(1.0, *(0.999 * (-s[ds < 0] / ds[ds < 0])
-                         if np.any(ds < 0) else [1.0]))
-        a_d = min(1.0, *(0.999 * (-z[dz < 0] / dz[dz < 0])
-                         if np.any(dz < 0) else [1.0]))
-        v = v + a_p * dv
-        s = s + a_p * ds
-        z = z + a_d * dz
-    # optional pure-centering finish: on a degenerate optimal face Mehrotra
-    # steps can drift off the central path; sigma=1 steps at a small fixed
-    # mu pull the iterate back to the path (whose limit is the analytic
-    # center of the face — the point a conic IPM reports).
-    for _ in range(center_iters):
-        r_p = G @ v + s - h
-        w = z / s
-        H = P + (G.T * w) @ G
-        H[np.arange(n), np.arange(n)] += 1e-13 * (1.0 + np.trace(H) / n)
-        try:
-            Hinv = np.linalg.inv(H)
-        except np.linalg.LinAlgError:
-            Hinv = np.linalg.inv(H + 1e-9 * np.trace(H) / n * np.eye(n))
-        grad = P @ v + q
-        rc = np.full(len(h), center_mu)
-        rhs = -grad - G.T @ (w * r_p + rc / s)
-        dv = Hinv @ rhs
-        ds = -r_p - G @ dv
-        dz = (rc - z * ds) / s - z
-        a_p = min(1.0, *(0.999 * (-s[ds < 0] / ds[ds < 0])
-                         if np.any(ds < 0) else [1.0]))
-        a_d = min(1.0, *(0.999 * (-z[dz < 0] / dz[dz < 0])
-                         if np.any(dz < 0) else [1.0]))
-        a = min(a_p, a_d)
-        v = v + a * dv
-        s = s + a * ds
-        z = z + a * dz
-    return v
 
 
 # ---------------------------------------------------------------------------
@@ -742,11 +882,8 @@ def solve_l1_pwc_smoothper_trend(
     w4: float = 1e1,
     num_harmonics: int = 6,
     period: float = PERIOD_DAYS,
-    admm_iters: int = 15000,
-    rho: float = 0.01,
     n_reweight: int = 1,
     reweight_eps: float = 0.1,
-    method: str = "admm",
 ):
     """Reference capacity-change model (_cvx_signal_decompositions.py:193-289):
 
@@ -756,6 +893,14 @@ def solve_l1_pwc_smoothper_trend(
          beta*365 in [-0.2, 0.05],
     followed by ``n_reweight`` passes of tvw = 1/(eps + |D1 x2|).
 
+    Each pass is one :func:`_tv_ipm` solve (l1 data term, border [B, t])
+    finished by :func:`_polish_pwc`, solved again with beta pinned if it
+    leaves its box (the optimum then lies on the crossed bound). The
+    interior-point path heads for the analytic center of the degenerate
+    optimal face, as the reference's conic solver does. A solve that
+    reaches the iteration cap without meeting its gap raises
+    ``RuntimeError`` unless its polish passes the KKT check.
+
     Returns (s_hat, s_seas, s_lin, obj).
     """
     y = np.asarray(y, dtype=np.float64)
@@ -763,257 +908,111 @@ def solve_l1_pwc_smoothper_trend(
     use = np.isfinite(y)
     if use_ixs is not None:
         use &= np.asarray(use_ixs, dtype=bool)
-    yu = y[use]
+    yc = np.where(use, y, 0.0)
     t_full = np.arange(T, dtype=np.float64)
-
-    # Short series: the dense interior-point QP is tiny (~(2T+pB)^2 per
-    # Newton step, ~30 steps) while the ADMM's 15k fixed-rate iterations
-    # are pure Python overhead — a 30x wall-clock swing per site on
-    # month-scale fleet slices. Both converge to the same optimum (the
-    # IPM to the analytic center of any degenerate face, matching the
-    # reference's conic solver); the ADMM+polish stays the default for
-    # long series where the dense QP would be O(T^3) per step.
-    if method == "admm" and T <= 200:
-        method = "ipm"
 
     B = trig_basis(T, num_harmonics, period, include_const=False)
     q3 = harmonic_penalty(num_harmonics, w3, period, include_const=False,
                           normalized_basis=False)
-    pB = B.shape[1]
-    D = _diff1(T)
-    m = D.shape[0]
     lo, hi = -0.2 / 365.0, 0.05 / 365.0
 
-    tvw = np.ones(m)
-    x2 = np.zeros(T)
-    z3 = np.zeros(pB)
-    beta = 0.0
+    tvw = np.ones(T - 1)
     for _pass in range(n_reweight + 1):
-        if method == "ipm":
-            # interior-point: the l1 parts make the optimal face degenerate
-            # (verified: ADMM reaches the same objective at rho-dependent
-            # face points); the central path selects the analytic center,
-            # matching the reference's conic solver.
-            x2, z3, beta = _ipm_pwc_pass(
-                yu, use, B, q3, D, tvw, w2, w4, lo, hi)
-            # support polish (same as the ADMM branch): the IPM's
-            # stall-tolerance iterate carries O(1e-2) wiggle along the
-            # weakly-determined plateau directions, which makes the
-            # "piecewise constant" component not exactly constant and
-            # lets bin-edge days flip capacity labels; fixing the
-            # detected jump support and re-solving the restricted
-            # equality-constrained problem restores exact plateaus
-            e_res = yu - (x2 + B @ z3 + beta * t_full)[use]
-            splits = (e_res, np.diff(x2), beta)
-            admm_u = np.concatenate([x2, z3, [beta]])
-            px2, pz3, pbeta, ok = _polish_pwc(
-                yu, use, B, q3, D, tvw, w2, w4, lo, hi, splits,
-                admm_u=admm_u)
-            if ok:
-                x2, z3, beta = px2, pz3, pbeta
-        else:
-            x2, z3, beta, splits = _admm_pwc_smoothper_trend(
-                yu, use, B, q3, D, tvw, w2, w4, lo, hi, rho, admm_iters)
-            admm_u = np.concatenate([x2, z3, [beta]])
-            px2, pz3, pbeta, ok = _polish_pwc(
-                yu, use, B, q3, D, tvw, w2, w4, lo, hi, splits, admm_u=admm_u)
-            if ok:
-                x2, z3, beta = px2, pz3, pbeta
+        kt = w2 * tvw / (T - 1)
+        x2, zt = _pwc_pass(yc, use, np.column_stack([B, t_full]),
+                           np.append(q3, w4 * T), kt)
+        z3, beta = zt[:-1], zt[-1]
+        if not lo <= beta <= hi:
+            beta = min(max(beta, lo), hi)
+            x2, z3 = _pwc_pass(yc - beta * t_full, use, B, q3, kt)
         if _pass < n_reweight:
             tvw = 1.0 / (reweight_eps + np.abs(np.diff(x2)))
 
     s_seas = B @ z3
     s_lin = beta * t_full
-    e = yu - (x2 + s_seas + s_lin)[use]
+    e = y[use] - (x2 + s_seas + s_lin)[use]
     obj = float(np.sum(np.abs(e)) / T
                 + w2 * np.sum(tvw * np.abs(np.diff(x2))) / (T - 1)
                 + z3 @ (q3 * z3) + w4 * T * beta ** 2)
     return x2, s_seas, s_lin, obj
 
 
-def _ipm_pwc_pass(yu, use, B, q3, D, tvw, w2, w4, lo, hi):
-    """One reweighting pass of the D3 problem as an inequality-form QP:
-    v = [x2; z3; beta; t_e; t_d] with abs-epigraph rows (the same
-    inequality set the reference's CVXPY canonicalization produces)."""
-    T = B.shape[0]
-    pB = B.shape[1]
-    nuse = int(use.sum())
-    t_full = np.arange(T, dtype=np.float64)
-    Xr = np.hstack([np.eye(T)[use], B[use], t_full[use, None]])
-    m1 = D.shape[0]
-    nx = T + pB + 1
-    n = nx + nuse + m1
-    P = np.zeros((n, n))
-    P[T:T + pB, T:T + pB] = 2.0 * np.diag(q3)
-    P[nx - 1, nx - 1] = 2.0 * w4 * T
-    q = np.zeros(n)
-    q[nx:nx + nuse] = 1.0 / T
-    q[nx + nuse:] = w2 * tvw / (T - 1.0)
-
-    G = np.zeros((2 * nuse + 2 * m1 + 2, n))
-    h = np.zeros(2 * nuse + 2 * m1 + 2)
-    # r - te <= 0  ->  -Xr v_x - te <= -y
-    G[:nuse, :nx] = -Xr
-    G[:nuse, nx:nx + nuse] = -np.eye(nuse)
-    h[:nuse] = -yu
-    # -r - te <= 0  ->  Xr v_x - te <= y
-    G[nuse:2 * nuse, :nx] = Xr
-    G[nuse:2 * nuse, nx:nx + nuse] = -np.eye(nuse)
-    h[nuse:2 * nuse] = yu
-    r0 = 2 * nuse
-    G[r0:r0 + m1, :T] = D
-    G[r0:r0 + m1, nx + nuse:] = -np.eye(m1)
-    G[r0 + m1:r0 + 2 * m1, :T] = -D
-    G[r0 + m1:r0 + 2 * m1, nx + nuse:] = -np.eye(m1)
-    G[-2, nx - 1] = 1.0
-    h[-2] = hi
-    G[-1, nx - 1] = -1.0
-    h[-1] = -lo
-    # tol=1e-8: the consumers round the pwc level into 0.05 capacity
-    # bins (daily_flags custom_round), so 1e-8-relative optimality is
-    # 5+ orders beyond what can move a label, and it lets the plateau
-    # stall-exit fire at 1e-5-relative instead of grinding to 1e-10
-    v = ipm_qp(P, q, G, h, tol=1e-8, center_iters=15, center_mu=1e-8)
-    return v[:T], v[T:T + pB], float(v[nx - 1])
+def _pwc_pass(yc, use, B, q, kt):
+    """One D3 solve without the beta box, polished: (x2, border)."""
+    X, TH, DX, R, conv = _tv_ipm(yc[:, None], use[:, None], B, np.diag(q),
+                                 kt[:, None], len(yc), l1_weight=1.0 / len(yc))
+    pol = _polish_pwc(yc, use, B, q, kt, R[:, 0], DX[:, 0], X[:, 0], TH[:, 0])
+    if not conv[0] and (pol is None or not pol[2]):
+        raise RuntimeError(
+            "l1_pwc_smoothper_trend: interior-point solve did not converge "
+            f"in {_TV_IPM_MAX_ITERS} iterations")
+    return (X[:, 0], TH[:, 0]) if pol is None else pol[:2]
 
 
-def _admm_pwc_smoothper_trend(yu, use, B, q3, D, tvw, w2, w4, lo, hi,
-                              rho, admm_iters):
-    T = B.shape[0]
-    pB = B.shape[1]
-    m = D.shape[0]
-    t_full = np.arange(T, dtype=np.float64)
-    # u = [x2 (T) ; z3 (pB) ; beta (1)]
-    nu = T + pB + 1
-    # residual map on use set: r(u) = y - x2 - B z3 - beta t
-    Xr = np.hstack([np.eye(T)[use], B[use], t_full[use, None]])
-    Gtv = np.hstack([D, np.zeros((m, pB + 1))])
-    gb = np.zeros(nu)
-    gb[-1] = 1.0
-
-    P = np.zeros((nu, nu))
-    P[T:T + pB, T:T + pB] = 2.0 * np.diag(q3)
-    P[-1, -1] = 2.0 * w4 * T
-    K = P + rho * (Xr.T @ Xr + Gtv.T @ Gtv + np.outer(gb, gb))
-    Kinv = np.linalg.inv(K)
-
-    y_scale = max(1.0, float(np.abs(yu).max()) if len(yu) else 1.0)
-    ze = np.zeros(len(yu)); se = np.zeros(len(yu))
-    zt = np.zeros(m); st = np.zeros(m)
-    zb = 0.0; sb = 0.0
-    alpha = 1.8
-    ke = 1.0 / (T * rho)
-    kt = w2 * tvw / ((T - 1) * rho)
-    obj_prev = np.inf
-    obj_stable = 0
-    for it in range(admm_iters):
-        rhs = rho * (Xr.T @ (yu - ze + se) + Gtv.T @ (zt - st) + gb * (zb - sb))
-        u = Kinv @ rhs
-        r = yu - Xr @ u
-        Dx = Gtv @ u
-        bet = u[-1]
-        rh = alpha * r + (1.0 - alpha) * ze
-        ze_prev = ze
-        ze = _soft(rh + se, ke); se += rh - ze
-        Dh = alpha * Dx + (1.0 - alpha) * zt
-        zt_prev = zt
-        zt = _soft(Dh + st, kt); st += Dh - zt
-        bh = alpha * bet + (1.0 - alpha) * zb
-        zb = min(max(bh + sb, lo), hi); sb += bh - zb
-        if it % 25 == 24:
-            if _admm_converged(r - ze, ze - ze_prev, rho,
-                               tol=1e-8 * y_scale) and _admm_converged(
-                Dx - zt, zt - zt_prev, rho, tol=1e-8 * y_scale
-            ):
-                break
-            # objective-plateau stop (same rationale as the D4 solver):
-            # the support polish downstream recovers the exact optimum
-            # from the detected pattern, so iterating only has to get
-            # the SUPPORT right — once the true objective stops moving,
-            # further fixed-rate dual refinement is wasted wall time
-            # (year-length fleet series otherwise burn all 15k iters).
-            obj_cur = (
-                np.sum(np.abs(r)) / T
-                + np.sum(kt * np.abs(Dx)) * rho
-                + u[T : T + pB] @ (q3 * u[T : T + pB])
-                + w4 * T * bet**2
-            )
-            if abs(obj_prev - obj_cur) < 1e-8 * max(1.0, obj_cur):
-                obj_stable += 1
-                if obj_stable >= 4:
-                    break
-            else:
-                obj_stable = 0
-            obj_prev = obj_cur
-    return u[:T], u[T:T + pB], float(zb), (ze, zt, zb)
-
-
-def _polish_pwc(yu, use, B, q3, D, tvw, w2, w4, lo, hi, splits,
-                admm_u=None):
-    """Support-pattern polish: zero residuals and zero first-diffs become
-    equality constraints, nonzero ones contribute their fixed-sign linear
-    l1 terms, beta is pinned when at a bound. Tries several support
-    thresholds and accepts the candidate only if it lowers the true
-    objective (always a valid test — the objective is re-evaluated with
-    real absolute values, not the linearized surrogate)."""
-    ze, zt, zb = splits
-    T = B.shape[0]
-    pB = B.shape[1]
-    t_full = np.arange(T, dtype=np.float64)
-    Xr = np.hstack([np.eye(T)[use], B[use], t_full[use, None]])
-    Gtv = np.hstack([D, np.zeros((T - 1, pB + 1))])
-    nu = T + pB + 1
+def _polish_pwc(yc, use, B, q, kt, r, Dx, x0, th0):
+    """Support polish for D3: zero residuals and zero differences of the
+    interior-point iterate become equality constraints (x one level per
+    plateau, :func:`_plateaus`), nonzero ones add their fixed-sign l1
+    terms; several support thresholds are tried. KKT-passing candidates
+    (optimal) win, then the lowest true objective; one that fails the
+    check must lower the iterate's true objective. Returns (x, th,
+    kkt_ok) or None."""
+    T, kb = B.shape
     ke = 1.0 / T
-    kt = w2 * tvw / (T - 1.0)
-    beta_fixed = zb <= lo + 1e-12 or zb >= hi - 1e-12
 
-    def true_obj(u):
-        r = yu - Xr @ u
-        Dx = Gtv @ u
-        z3 = u[T:T + pB]
-        return (ke * np.sum(np.abs(r)) + np.sum(kt * np.abs(Dx))
-                + z3 @ (q3 * z3) + w4 * T * u[-1] ** 2)
+    def true_obj(x, th):
+        return (ke * np.sum(np.abs((yc - x - B @ th)[use]))
+                + np.sum(kt * np.abs(np.diff(x))) + th @ (q * th))
 
-    best_u = None
-    best_obj = true_obj(admm_u) if admm_u is not None else np.inf
-    se = max(1.0, np.abs(ze).max() if len(ze) else 1.0)
-    st = max(1.0, np.abs(zt).max() if len(zt) else 1.0)
-    P = np.zeros((nu, nu))
-    P[:T, :T] = 1e-9 * np.eye(T)  # KKT singularity guard
-    P[T:T + pB, T:T + pB] = 2.0 * np.diag(q3)
-    P[-1, -1] = 2.0 * w4 * T
+    obj0 = true_obj(x0, th0)
+    se = max(1.0, float(np.abs(r).max(initial=0.0)))
+    st = max(1.0, float(np.abs(Dx).max(initial=0.0)))
+    best, best_key = None, None
     for rel in (1e-3, 1e-4, 1e-5):
-        act_e = np.abs(ze) > rel * se
-        act_t = np.abs(zt) > rel * st
-        sgn_e = np.sign(ze[act_e])
-        sgn_t = np.sign(zt[act_t])
-        E_rows = [Xr[~act_e], Gtv[~act_t]]
-        e_rhs = [yu[~act_e], np.zeros(int((~act_t).sum()))]
-        if beta_fixed:
-            row = np.zeros((1, nu)); row[0, -1] = 1.0
-            E_rows.append(row); e_rhs.append(np.array([zb]))
-        E = np.vstack(E_rows)
-        neq = E.shape[0]
-        lin = -ke * (Xr[act_e].T @ sgn_e) + Gtv[act_t].T @ (kt[act_t] * sgn_t)
-        K = np.zeros((nu + neq, nu + neq))
-        K[:nu, :nu] = P
-        K[:nu, nu:] = E.T
-        K[nu:, :nu] = E
-        rhs = np.concatenate([-lin, np.concatenate(e_rhs)])
+        zero_e = use & (np.abs(r) <= rel * se)
+        act_e = use & ~zero_e
+        act_t = np.abs(Dx) > rel * st
+        sgn_e = np.sign(r) * act_e
+        sgn_t = np.sign(Dx) * act_t
+        pl = _plateaus(act_t, use.astype(np.float64), False)
+        if pl is None:
+            continue
+        seg, P = pl
+        K = P.shape[1]
+        Xz = np.hstack([P[seg], B])  # fit = Xz [levels; th]
+        lin = -ke * (Xz.T @ sgn_e)
+        lin[:K] += P.T @ np.bincount(seg, weights=_diff_t(kt * sgn_t, T, False),
+                                     minlength=len(P))
+        E = Xz[zero_e]
+        nv, neq = K + kb, E.shape[0]
+        # levels carry a tiny ridge (the KKT singularity guard)
+        H = np.diag(np.concatenate([1e-9 * (Xz[:, :K] ** 2).sum(axis=0), 2.0 * q]))
+        KKT = np.block([[H, E.T], [E, np.zeros((neq, neq))]])
         try:
-            sol = np.linalg.solve(K, rhs)
+            sol = np.linalg.solve(KKT, np.concatenate([-lin, yc[zero_e]]))
         except np.linalg.LinAlgError:
             continue
-        u = sol[:nu]
-        if not beta_fixed and not (lo - 1e-9 <= u[-1] <= hi + 1e-9):
+        if not np.all(np.isfinite(sol)):
             continue
-        o = true_obj(u)
-        if o < best_obj - 1e-15:
-            best_obj = o
-            best_u = u
-    if best_u is None:
-        return None, None, None, False
-    return best_u[:T], best_u[T:T + pB], float(best_u[-1]), True
+        x, th, nu = Xz[:, :K] @ sol[:K], sol[K:nv], sol[nv:]
+        # KKT of the full problem: the multipliers of the zero residuals
+        # act as their subgradients; difference duals by cumulative sum
+        g = -ke * sgn_e
+        g[zero_e] += nu
+        dual_t = np.cumsum(g)[:-1]
+        atol = 1e-9 * (1.0 + ke * T)
+        kkt = bool(
+            np.all(np.abs(nu) <= ke * (1.0 + 1e-4) + atol)
+            and np.all(np.abs(dual_t[~act_t]) <= kt[~act_t] * (1.0 + 1e-4) + atol)
+            and np.all((yc - x - B @ th)[act_e] * sgn_e[act_e] >= -1e-9)
+            and np.all(np.diff(x)[act_t] * sgn_t[act_t] >= -1e-9)
+        )
+        o = true_obj(x, th)
+        if not kkt and not o < obj0 - 1e-15:
+            continue
+        if best_key is None or (kkt, -o) > best_key:
+            best, best_key = (x, th, kkt), (kkt, -o)
+    return best
 
 
 # ---------------------------------------------------------------------------

@@ -282,7 +282,7 @@ def test_fleet_report_runs_each_kernel_once_per_group(spark, monkeypatch):
     assert groups == {
         "daily_quality_scores": 2,
         "detect_capacity_changes": 2,
-        "tune_time_shift_w1": 22,  # 2 sites x 11 grid points
+        "tune_time_shift_w1": 2,  # a site's 11-point grid is one batch
         "detect_time_shifts": 2,
         "run_loss_factor_analysis": 1,  # the 400-day site only
     }

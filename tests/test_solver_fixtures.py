@@ -86,11 +86,11 @@ def test_tl1_l2d2p365_fixture(name, key):
 def test_l1_pwc_smoothper_trend_fixture():
     inp, out = _load("l1_l1d1_l2d2p365_default")
     signal = np.array(inp["test_signal"])
-    # method="ipm" follows the central path like the reference's conic
-    # solver — required because the pass-1 optimal face is degenerate and
-    # the reweighting locks in the face point (see solvers/exact.py)
-    s_hat, s_seas, s_lin, obj = solve_l1_pwc_smoothper_trend(
-        signal, w2=5e0, method="ipm")
+    # the interior-point solver follows the central path like the
+    # reference's conic solver — required because the pass-1 optimal face
+    # is degenerate and the reweighting locks in the face point (see
+    # solvers/exact.py)
+    s_hat, s_seas, s_lin, obj = solve_l1_pwc_smoothper_trend(signal, w2=5e0)
     assert _mae(s_hat, out["expected_s_hat_365"]) < MAE_THRESHOLD
     assert _mae(s_seas, out["expected_s_seas_365"]) < MAE_THRESHOLD
     assert abs(obj - out["expected_obj_val_365"]) < 0.5 * 10 ** (-OBJ_PLACES)
