@@ -13,15 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from solar_data_tools_spark.parallel import grouped_apply
-
-from solar_data_tools_spark.shipping import ensure_package_on_executors
-
-
-def _site_schema(daily: DataFrame, site_col: str, extra: str) -> str:
-    site_dtype = dict(daily.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    return f"{site_col} {st}, date date, {extra}"
+from solar_data_tools_spark.parallel import grouped_apply, site_key_type
 
 
 # ------------------------------------------------------------- clear days
@@ -42,9 +34,9 @@ def detect_clear_days(
     Input: daily table with smoothness + energy columns. Output adds
     ``clear`` boolean.
     """
-    ensure_package_on_executors(daily.sparkSession)
-    schema = _site_schema(
-        daily, site_col, f"{smoothness_col} double, {energy_col} double, clear boolean"
+    schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, date date, "
+        f"{smoothness_col} double, {energy_col} double, clear boolean"
     )
 
     def _detect(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -96,11 +88,9 @@ def detect_capacity_changes(
     ``w1`` is the TV weight (the reference's tuned ``w2``; its holdout
     grid is logspace(-0.5, 2.5, 13), capacity_change.py:75).
     """
-    ensure_package_on_executors(daily.sparkSession)
-    schema = _site_schema(
-        daily,
-        site_col,
-        "cap_level double, capacity_label int, cap_changed boolean",
+    schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, date date, "
+        "cap_level double, capacity_label int, cap_changed boolean"
     )
 
     def _detect(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -150,12 +140,11 @@ def detect_capacity_changes(
             }
         )
 
-    if capture_errors:
-        from solar_data_tools_spark.parallel import wrap_capture_errors
-
-        _detect, schema = wrap_capture_errors(_detect, schema, site_col)
     cols = [site_col, "date", metric_col]
-    return grouped_apply(daily.select(*cols), [site_col], _detect, schema)
+    return grouped_apply(
+        daily.select(*cols), [site_col], _detect, schema,
+        capture_errors=capture_errors,
+    )
 
 
 # ------------------------------------------------------------ time shifts
@@ -198,11 +187,9 @@ def detect_time_shifts(
     Output: (site, date, noon_pwc, noon_seasonal, shift_hours) where
     shift_hours is the correction to ADD to slot positions (W6 roll).
     """
-    ensure_package_on_executors(daily.sparkSession)
-    schema = _site_schema(
-        daily,
-        site_col,
-        "noon_pwc double, noon_seasonal double, shift_hours double",
+    schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, date date, "
+        "noon_pwc double, noon_seasonal double, shift_hours double"
     )
 
     def _detect(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -249,14 +236,13 @@ def detect_time_shifts(
             }
         )
 
-    if capture_errors:
-        from solar_data_tools_spark.parallel import wrap_capture_errors
-
-        _detect, schema = wrap_capture_errors(_detect, schema, site_col)
     cols = [site_col, "date", noon_col]
     cols += [use_col] if use_col else []
     cols += [w1_col] if w1_col else []
-    return grouped_apply(daily.select(*cols), [site_col], _detect, schema)
+    return grouped_apply(
+        daily.select(*cols), [site_col], _detect, schema,
+        capture_errors=capture_errors,
+    )
 
 
 def apply_time_shift_correction(
@@ -311,8 +297,10 @@ def quality_clustering(
     connected-components + arg-min join) — a hash-checked clustering
     operator instead of a rows-only one.
     """
-    ensure_package_on_executors(daily.sparkSession)
-    schema = _site_schema(daily, site_col, "quality_cluster int")
+    schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, date date, "
+        "quality_cluster int"
+    )
 
     def _cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("date").reset_index(drop=True)
@@ -467,8 +455,10 @@ def detect_clipping(
        clip_stat_1 lies within ``pm_neighborhood`` of a point mass
        (clipping.py:70-93).
     """
-    ensure_package_on_executors(daily.sparkSession)
-    schema = _site_schema(daily, site_col, f"{stat_col} double, clipped boolean")
+    schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, date date, "
+        f"{stat_col} double, clipped boolean"
+    )
 
     def _detect(pdf: pd.DataFrame) -> pd.DataFrame:
         from solar_data_tools_spark.solvers.exact import (

@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 
 def dilate_day(
@@ -82,16 +82,16 @@ def dilate(
     NORMALIZES data volume, which is exactly why the reference uses it
     before the quantile surface fits.
     """
-    ensure_package_on_executors(measurements.sparkSession)
     from pyspark.sql import functions as F
 
     joined = measurements.join(
         F.broadcast(sunrise_sunset), on=[site_col, "date"], how="inner"
     ).where(F.col("sunrise").isNotNull() & F.col("sunset").isNotNull())
 
-    site_dtype = dict(measurements.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    schema = f"{site_col} {st}, date date, dil_slot int, dil_value double"
+    schema = (
+        f"{site_col} {site_key_type(measurements, site_col)}, date date, "
+        "dil_slot int, dil_value double"
+    )
 
     def _dilate(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("hod").reset_index(drop=True)

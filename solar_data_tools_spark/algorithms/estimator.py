@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solar_data_tools_spark.functions import solar as sol
-from solar_data_tools_spark.parallel import grouped_apply
+from solar_data_tools_spark.parallel import grouped_apply, site_key_type
 
 
 def estimate_location(
@@ -140,11 +140,9 @@ def estimate_system_parameters(
         (F.col("value") / F.col("_cap")).alias("costheta"),
     ).where(F.col("costheta") > fit_threshold_frac)
 
-    site_dtype = dict(meas.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
     schema = (
-        f"{site_col} {st}, longitude double, latitude double, "
-        "tilt_deg double, azimuth_deg double"
+        f"{site_col} {site_key_type(meas, site_col)}, longitude double, "
+        "latitude double, tilt_deg double, azimuth_deg double"
     )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:

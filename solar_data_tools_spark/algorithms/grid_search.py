@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 
 def grid_holdout_mse(
@@ -75,14 +75,14 @@ def tune_time_shift_w1(
     ``"argmin"`` (default, the committed q74 semantics) takes the
     smallest error outright.
     """
-    ensure_package_on_executors(daily.sparkSession)
     if w1_grid is None:
         w1_grid = [float(w) for w in np.logspace(-1, 1.5, 11)]
     sel_cols = [site_col, "date", noon_col] + ([use_col] if use_col else [])
 
-    site_dtype = dict(daily.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    schema = f"{site_col} {st}, w1 double, holdout_mse double"
+    schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, w1 double, "
+        "holdout_mse double"
+    )
 
     def _score(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("date").reset_index(drop=True)

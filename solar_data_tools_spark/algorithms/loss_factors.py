@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 
 def fit_loss_components(
@@ -61,7 +61,7 @@ def fit_loss_components(
 
     Returns components + ``degradation_rate_pct_per_year``.
     """
-    from solar_data_tools_spark.solvers.basis import fourier_basis
+    from solar_data_tools_spark.solvers.exact import trig_basis
     from solar_data_tools_spark.solvers.soiling import (
         fit_soiling_sawtooth_with_trend,
     )
@@ -78,8 +78,7 @@ def fit_loss_components(
 
     t = np.arange(n, dtype=np.float64)
     years = t / 365.2425
-    Xs = fourier_basis(t, num_harmonics=num_harmonics, period=period,
-                       include_intercept=False)
+    Xs = trig_basis(n, num_harmonics, period, include_const=False)
 
     baseline = np.nanmedian(y)
     seasonal = np.zeros(n)
@@ -181,13 +180,10 @@ def run_loss_factor_analysis(
     the capacity component so capacity steps are attributed separately
     (``loss_capacity``) instead of contaminating soiling/degradation.
     """
-    ensure_package_on_executors(daily.sparkSession)
-    site_dtype = dict(daily.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
     schema = (
-        f"{site_col} {st}, degradation_rate_pct_per_year double, "
-        "loss_seasonal double, loss_degradation double, loss_soiling double, "
-        "loss_capacity double"
+        f"{site_col} {site_key_type(daily, site_col)}, "
+        "degradation_rate_pct_per_year double, loss_seasonal double, "
+        "loss_degradation double, loss_soiling double, loss_capacity double"
     )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -227,14 +223,13 @@ def run_loss_factor_analysis(
 
     from solar_data_tools_spark.parallel import grouped_apply
 
-    if capture_errors:
-        from solar_data_tools_spark.parallel import wrap_capture_errors
-
-        _fit, schema = wrap_capture_errors(_fit, schema, site_col)
     cols = [site_col, "date", energy_col] + (
         [label_col] if label_col is not None else []
     )
-    return grouped_apply(daily.select(*cols), [site_col], _fit, schema)
+    return grouped_apply(
+        daily.select(*cols), [site_col], _fit, schema,
+        capture_errors=capture_errors,
+    )
 
 
 def mc_degradation_estimate(
@@ -252,7 +247,6 @@ def mc_degradation_estimate(
     (loss_factor_analysis.py:78-197) becomes embarrassingly parallel.
     Output: per-site median / 2.5% / 97.5% quantiles of the rate (A21).
     """
-    ensure_package_on_executors(daily.sparkSession)
     spark = daily.sparkSession
     params = spark.createDataFrame(
         [(i, 1000 + i) for i in range(n_samples)], "sample_id int, seed int"
@@ -261,9 +255,10 @@ def mc_degradation_estimate(
         F.broadcast(params)
     )
 
-    site_dtype = dict(daily.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    fit_schema = f"{site_col} {st}, sample_id int, rate double"
+    fit_schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, sample_id int, "
+        "rate double"
+    )
 
     def _fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("date").reset_index(drop=True)

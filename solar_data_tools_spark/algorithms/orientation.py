@@ -15,7 +15,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 _DEG = math.pi / 180.0
 
@@ -104,10 +104,10 @@ def estimate_orientation(
 ) -> DataFrame:
     """Fleet orientation estimation: input (site, delta_deg, omega_deg,
     costheta) filtered samples -> one (tilt_deg, azimuth_deg) per site."""
-    ensure_package_on_executors(samples.sparkSession)
-    site_dtype = dict(samples.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    schema = f"{site_col} {st}, tilt_deg double, azimuth_deg double"
+    schema = (
+        f"{site_col} {site_key_type(samples, site_col)}, tilt_deg double, "
+        "azimuth_deg double"
+    )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
         tilt, az = fit_tilt_azimuth(

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from solar_data_tools_spark.functions import solar as sol
 from solar_data_tools_spark.operators.canonical import tick_avg
-from solar_data_tools_spark.parallel import grouped_apply
+from solar_data_tools_spark.parallel import grouped_apply, site_key_type
 
 _LON_ESTIMATORS = ("calculated", "fit_l1", "fit_l2", "fit_huber")
 _EOT_METHODS = ("duffie", "da_rosa")
@@ -211,12 +211,10 @@ def longitude_study(
     if "fit_huber" not in estimators:
         return closed
 
-    site_dtype = dict(meas.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
     schema = (
-        f"{site_col} {st}, estimator string, eot_calculation string, "
-        "solar_noon_method string, day_selection_method string, "
-        "longitude double"
+        f"{site_col} {site_key_type(meas, site_col)}, estimator string, "
+        "eot_calculation string, solar_noon_method string, "
+        "day_selection_method string, longitude double"
     )
 
     def _huber(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -392,11 +390,10 @@ def tilt_azimuth_study(
         )
     )
     keys = [site_col, "declination_method", "init_tilt", "init_azimuth"]
-    site_dtype = dict(meas.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
     schema = (
-        f"{site_col} {st}, declination_method string, init_tilt double, "
-        "init_azimuth double, tilt_deg double, azimuth_deg double"
+        f"{site_col} {site_key_type(meas, site_col)}, "
+        "declination_method string, init_tilt double, init_azimuth double, "
+        "tilt_deg double, azimuth_deg double"
     )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 
 def pava_decreasing(y: np.ndarray) -> np.ndarray:
@@ -204,13 +204,10 @@ def pvpro_postprocess(
 
     Output: (site, param, seq, value, composed, degradation, periodic,
     sparse_noise)."""
-    ensure_package_on_executors(params.sparkSession)
-    site_dtype = dict(params.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
     schema = (
-        f"{site_col} {st}, {param_col} string, seq long, value double, "
-        "composed double, degradation double, periodic double, "
-        "sparse_noise double"
+        f"{site_col} {site_key_type(params, site_col)}, {param_col} string, "
+        "seq long, value double, composed double, degradation double, "
+        "periodic double, sparse_noise double"
     )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -26,8 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from solar_data_tools_spark.parallel import grouped_apply
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import grouped_apply, site_key_type
 from solar_data_tools_spark.solvers.exact import solve_tl1_l2d2p365
 
 SUNRISE_TAU = 0.1  # reference sunrise_sunset_estimation.py:40
@@ -362,15 +361,13 @@ def daily_quality_scores(
     ``capture_errors=True`` adds an ``error`` column and turns a site's
     failure into a 1-row null record instead of a job failure (the
     fleet-runner per-stage isolation contract)."""
-    ensure_package_on_executors(standardized.sparkSession)
-    site_dtype = dict(standardized.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
     schema = (
-        f"{site_col} {st}, date date, density double, linearity double, "
-        "clipping_1 double, clipping_2 double, quality_clustering int, "
-        "no_errors boolean, clear boolean, clipped boolean, "
-        "capacity_estimate double, data_quality_score double, "
-        "data_clearness_score double, inverter_clipping boolean"
+        f"{site_col} {site_key_type(standardized, site_col)}, date date, "
+        "density double, linearity double, clipping_1 double, "
+        "clipping_2 double, quality_clustering int, no_errors boolean, "
+        "clear boolean, clipped boolean, capacity_estimate double, "
+        "data_quality_score double, data_clearness_score double, "
+        "inverter_clipping boolean"
     )
 
     def _score(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -431,13 +428,10 @@ def daily_quality_scores(
             }
         )
 
-    if capture_errors:
-        from solar_data_tools_spark.parallel import wrap_capture_errors
-
-        _score, schema = wrap_capture_errors(_score, schema, site_col)
     return grouped_apply(
         standardized.select(site_col, "grid_ts", "value"),
         [site_col],
         _score,
         schema,
+        capture_errors=capture_errors,
     )

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 
 def _cv_rmse(x: np.ndarray, y: np.ndarray, k: int = 5) -> float:
@@ -49,10 +49,10 @@ def identify_best_sensor(
     sensor_value). Output: one row per (site, sensor) with corrcoef and
     cv_rmse, plus ``is_best`` marking the per-site winner
     (deterministic tie-break: lower rmse, then sensor name)."""
-    ensure_package_on_executors(joined.sparkSession)
-    site_dtype = dict(joined.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    schema = f"{site_col} {st}, {sensor_col} string, corr double, cv_rmse double"
+    schema = (
+        f"{site_col} {site_key_type(joined, site_col)}, "
+        f"{sensor_col} string, corr double, cv_rmse double"
+    )
 
     def _score(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ts").reset_index(drop=True)

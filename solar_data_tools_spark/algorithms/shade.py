@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from solar_data_tools_spark.operators.canonical import pround
-
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 
 def load_shade_pca_basis() -> dict[str, np.ndarray]:
@@ -187,12 +186,10 @@ def decompose_shade(
     Output: (site, delta_bin, dil_slot, observed, clearsky, shade_frac,
     is_shaded).
     """
-    ensure_package_on_executors(grid.sparkSession)
-    site_dtype = dict(grid.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
     schema = (
-        f"{site_col} {st}, delta_bin double, dil_slot int, observed double, "
-        "clearsky double, shade_frac double, is_shaded boolean"
+        f"{site_col} {site_key_type(grid, site_col)}, delta_bin double, "
+        "dil_slot int, observed double, clearsky double, shade_frac double, "
+        "is_shaded boolean"
     )
     basis = load_shade_pca_basis() if model == "pca" else None
 

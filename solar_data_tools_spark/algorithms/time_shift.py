@@ -114,10 +114,8 @@ def fix_time_shifts(
     Input needs (site, date, slot, hod, value) columns (with_time_columns
     layout)."""
     from solar_data_tools_spark.operators.windows import circular_roll_slots
-    from solar_data_tools_spark.parallel import grouped_apply
-    from solar_data_tools_spark.shipping import ensure_package_on_executors
+    from solar_data_tools_spark.parallel import grouped_apply, site_key_type
 
-    ensure_package_on_executors(measurements.sparkSession)
     v = F.col("value")
     daily_cols = [
         # try_divide: an all-zero day has no energy mass; its noon metric
@@ -130,9 +128,10 @@ def fix_time_shifts(
         daily_cols.append(F.first(use_flag_col).alias("_use"))
     daily = measurements.groupBy(site_col, "date").agg(*daily_cols)
 
-    site_dtype = dict(measurements.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    schema = f"{site_col} {st}, date date, roll_k int"
+    schema = (
+        f"{site_col} {site_key_type(measurements, site_col)}, date date, "
+        "roll_k int"
+    )
 
     def _detect(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("date").reset_index(drop=True)

@@ -1347,7 +1347,7 @@ def minhash_band_store(
     store scan per dump, persist without the signature column and keep
     the default two-pass path.
 
-    Measured honestly (tools/probe_incremental_minhash.py, local[32]):
+    Measured honestly (local[32]):
     at 1M-vs-1M the banded path is wall-PARITY with the default
     (47.3 s vs 42.8 s) — on local NVMe, scanning x8 signature copies
     costs about what the skipped band explode saves. The layout's real

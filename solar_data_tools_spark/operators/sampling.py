@@ -433,9 +433,6 @@ def pack_sequences_ffd(
     )
 
     from solar_data_tools_spark.parallel import grouped_apply
-    from solar_data_tools_spark.shipping import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def _ffd(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(

@@ -313,10 +313,10 @@ def seeded_hyperplanes(
     The signature geometry is the recall knob: P(bit differs) =
     theta/pi per plane, so for a target cosine threshold t, pairs at
     exactly t differ in ``n_planes * arccos(t) / pi`` expected bits —
-    size ``max_hamming`` above that with margin. MEASURED
-    (tools/probe_lsh_recall.py, 64 planes, threshold 0.9, planted
-    pairs at exact cosines): expected differing bits are 6.5 / 8.2 /
-    9.0 at cosine 0.95 / 0.92 / 0.905, and recall at max_hamming
+    size ``max_hamming`` above that with margin. MEASURED (64 planes,
+    threshold 0.9, planted pairs at exact cosines): expected differing
+    bits are 6.5 / 8.2 / 9.0 at cosine 0.95 / 0.92 / 0.905, and recall
+    at max_hamming
     6 / 10 / 14 is 0.55/0.27/0.18 → 0.95/0.81/0.73 → 1.00/0.99/0.98 —
     i.e. a budget AT the expected bits halves recall (binomial spread
     is ~2.7 bits there), a budget ~5 bits above (~2 sigma) recovers

@@ -38,10 +38,10 @@ manual fallback when AQE is off. Key-skew victims that salting CANNOT
 fix exactly — per-key ``collect_list``/window/grouped-map state that
 genuinely needs every row of the hot key in one place — need a
 different design (pre-aggregation or the bounded per-group contract
-the fleet tier enforces; see ``parallel.grouped_apply`` and the probe
-budget in ``tools/fleet_probe.py``). :func:`key_skew_report` is the
-diagnosis step for ALL of these (joins included — AQE splits those at
-runtime).
+the fleet tier enforces; see ``parallel.grouped_apply`` and
+``parallel.DEFAULT_GROUP_BUDGET_BYTES``). :func:`key_skew_report` is
+the diagnosis step for ALL of these (joins included — AQE splits those
+at runtime).
 
 The reference has no distributed-shuffle notion at all (single-node
 numpy; see SURVEY §4.1) — both operators are Spark-native scale

@@ -30,6 +30,13 @@ Memory bound per task = the partition's row slice (all groups hash-spread
 over ``n`` partitions), the same bound ``applyInPandas`` already imposed
 per group times groups-per-task — daily/solver tables are a few MB per
 1000 sites, far under executor memory.
+
+``grouped_apply`` is also the one owner of the per-group stage contract,
+so a solver stage states only its kernel and its output schema: it ships
+the package to the executors, bounds each group's memory, and with
+``capture_errors=True`` turns a group's failure into an error row (the
+fleet runner's per-site isolation). :func:`site_key_type` gives the
+type a stage emits for its site key.
 """
 
 from __future__ import annotations
@@ -39,41 +46,22 @@ from typing import Callable, Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+# Task waves per core: group-to-task assignment is by key hash, so at one
+# task per core the busiest task draws several times the mean solver load
+# (observed 2.6x on a 150-site fleet at 8 cores).
+TASKS_PER_CORE = 4
 
-def partition_for_grouped_map(
-    df: DataFrame, keys: list[str], tasks_per_core: int = 4
-) -> DataFrame:
-    """Repartition by the group key with explicit parallelism BEFORE a
-    grouped-map stage (several task waves per core by default: group-to-
-    task assignment is by key hash, so at one task per core the busiest
-    task draws several times the mean solver load; observed 2.6x on a
-    150-site fleet at 8 cores).
-
-    NOTE: for ``groupBy().applyInPandas`` consumers this alone is not
-    sufficient: EnsureRequirements replaces the explicit repartition
-    with its own coalescible exchange, which AQE may fold into one task
-    unless ``minPartitionSize`` is globally overridden. Prefer
-    :func:`grouped_apply`, whose ``repartition(n, keys) -> mapInPandas``
-    shape keeps the REPARTITION_BY_NUM hint and needs no session config.
-    """
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    n = max(sc.defaultParallelism * tasks_per_core, 1)
-    return df.repartition(n, *keys)
-
-
-# Per-group pandas budget for grouped-map kernels. The fleet probe
-# MEASURES the real quantity (26.5 MB for a 3-year 5-min site, 9.7 MB
-# for 400 days — tools/fleet_probe.py asserts it); the guard exists for
-# the pathological tail a 100 TB fleet will contain (a 1-second-cadence
+# Per-group pandas budget for grouped-map kernels. A 3-year 5-min site
+# measured 26.5 MB and a 400-day one 9.7 MB; the guard exists for the
+# pathological tail a 100 TB fleet will contain (a 1-second-cadence
 # site, a corrupt ingest that lands one site 1000x its share): without
 # it, ONE such group OOMs an executor and kills the whole fleet job.
-# With it, the site fails loudly (grouped_apply) or becomes a per-site
-# error annotation (wrap_capture_errors), matching the fleet-runner
-# isolation contract. The check is one pandas memory_usage(deep=True)
-# call per group — O(columns) on the numeric frames the solver tier
-# feeds (deep string scans only arise on curation-tier frames, which
-# do not route through these wrappers).
+# With it, the site fails loudly, or becomes a per-site error row on a
+# capturing stage (``grouped_apply(..., capture_errors=True)``), matching
+# the fleet-runner isolation contract. The check is one pandas
+# memory_usage(deep=True) call per group — O(columns) on the numeric
+# frames the solver tier feeds (deep string scans only arise on
+# curation-tier frames, which set no budget).
 #
 # Scope (honest, per the r9 ADVICE): the check runs AFTER the
 # partition's Arrow batches are concatenated, so it bounds the
@@ -89,6 +77,12 @@ def partition_for_grouped_map(
 # made per-GROUP without per-key streaming (a batch legitimately mixes
 # many small groups, and one group legitimately spans many batches).
 DEFAULT_GROUP_BUDGET_BYTES = 512 * 1024 * 1024
+
+
+def site_key_type(df: DataFrame, site_col: str) -> str:
+    """The DDL type a grouped-map stage emits for ``df``'s site key: a
+    string site stays ``string``, every other type is ``long``."""
+    return "string" if dict(df.dtypes)[site_col] == "string" else "long"
 
 
 def _check_group_budget(
@@ -111,8 +105,8 @@ def grouped_apply(
     keys: list[str],
     fn: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    tasks_per_core: int = 4,
     group_budget_bytes: int | None = None,
+    capture_errors: bool = False,
 ) -> DataFrame:
     """``groupBy(keys).applyInPandas(fn, schema)`` with plan-owned
     parallelism and per-partition Python round-trips (see module
@@ -123,14 +117,60 @@ def grouped_apply(
     closure: a UDF's python-includes list is captured into its
     PythonFunction at creation time, so an ``addPyFile`` issued after
     building the closure never reaches the tasks that run it.
+
+    A group over ``group_budget_bytes`` raises ``MemoryError``.
+
+    ``capture_errors=True`` is the fleet-runner per-site isolation
+    contract (reference sdt_dask/dask_tool/runner.py:53-146): the output
+    gains an ``error string`` column, "No error" on every row of a group
+    whose kernel returned; a group whose kernel (or budget check) raises
+    becomes one row holding its key values, nulls elsewhere and
+    ``"Type: message"`` in ``error``, instead of failing the fleet job.
+    Capturing stages default the budget to
+    ``DEFAULT_GROUP_BUDGET_BYTES``, so an over-budget site is annotated
+    before its kernel allocates solver state. Every key must be a column
+    of ``schema`` (``ValueError`` otherwise, when the plan is built).
     """
     from solar_data_tools_spark.shipping import ensure_package_on_executors
 
     spark = df.sparkSession
-    ensure_package_on_executors(spark)
-    n = max(spark.sparkContext.defaultParallelism * tasks_per_core, 1)
-    prepared = df.repartition(n, *keys)
     key_list = list(keys)
+    budget, what = group_budget_bytes, "grouped_apply"
+    if capture_errors:
+        from pyspark.sql.types import StructType
+
+        col_names = StructType.fromDDL(schema).names
+        missing = [k for k in key_list if k not in col_names]
+        if missing:
+            raise ValueError(
+                f"grouped_apply: key columns {missing} not in schema "
+                f"{schema!r} (parsed columns: {col_names})"
+            )
+        if budget is None:
+            budget = DEFAULT_GROUP_BUDGET_BYTES
+        what = "per-site group"
+        schema = schema + ", error string"
+
+    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        _check_group_budget(pdf, budget, what)
+        return fn(pdf)
+
+    def capture_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        try:
+            out = run_group(pdf).copy()
+            out["error"] = "No error"
+            return out
+        except Exception as e:  # noqa: BLE001 — the isolation contract
+            row: dict = {c: [None] for c in col_names}
+            for k in key_list:
+                row[k] = [pdf[k].iloc[0]]
+            row["error"] = [f"{type(e).__name__}: {e}"]
+            return pd.DataFrame(row)
+
+    apply_group = capture_group if capture_errors else run_group
+    ensure_package_on_executors(spark)
+    n = max(spark.sparkContext.defaultParallelism * TASKS_PER_CORE, 1)
+    prepared = df.repartition(n, *keys)
 
     def _run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdfs = [b for b in batches]
@@ -140,80 +180,8 @@ def grouped_apply(
         if pdf.empty:
             return
         for _, g in pdf.groupby(key_list, sort=False, dropna=False):
-            _check_group_budget(g, group_budget_bytes, "grouped_apply")
-            out = fn(g.reset_index(drop=True))
+            out = apply_group(g.reset_index(drop=True))
             if out is not None and len(out):
                 yield out
 
     return prepared.mapInPandas(_run, schema)
-
-
-def wrap_capture_errors(
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: str,
-    site_col: str,
-    group_budget_bytes: int | None = DEFAULT_GROUP_BUDGET_BYTES,
-) -> tuple[Callable[[pd.DataFrame], pd.DataFrame], str]:
-    """Per-site failure isolation for grouped-map stages (the fleet-runner
-    contract, reference sdt_dask/dask_tool/runner.py:53-146): wrap a
-    grouped-apply kernel so one site's exception becomes a 1-row result
-    carrying the message in an ``error`` column ("No error" otherwise)
-    instead of killing the whole fleet job.
-
-    ``group_budget_bytes`` (round 9, default 512 MiB — the fleet
-    probe's measured 3-year site is 26.5 MB, 19x headroom): a site
-    whose pandas group exceeds the budget becomes an error row BEFORE
-    the kernel allocates solver state on it — one pathological site
-    (1-second cadence, corrupt fan-in) annotates instead of OOMing the
-    executor and killing the fleet job. Pass ``None`` to disable.
-
-    Returns (wrapped_fn, schema + ", error string").
-    """
-    # Split on TOP-LEVEL commas only: a naive comma-split would silently
-    # mis-derive names from parameterized types (decimal(10,2),
-    # struct<a:int,b:string>) and emit a malformed error row.
-    # (pyspark's _parse_datatype_string needs an active session, which
-    # this helper must not assume — it's called while building plans.)
-    parts, depth, cur = [], 0, []
-    for ch in schema:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    col_names = []
-    for part in parts:
-        toks = part.strip().split(None, 1)
-        if len(toks) != 2:
-            raise ValueError(
-                f"wrap_capture_errors: cannot derive a column name from "
-                f"schema fragment {part.strip()!r} in {schema!r}"
-            )
-        col_names.append(toks[0])
-    if site_col not in col_names:
-        raise ValueError(
-            f"wrap_capture_errors: site_col {site_col!r} not in schema "
-            f"{schema!r} (parsed columns: {col_names})"
-        )
-
-    def _wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        try:
-            _check_group_budget(
-                pdf, group_budget_bytes, "per-site group"
-            )
-            out = fn(pdf)
-            out = out.copy()
-            out["error"] = "No error"
-            return out
-        except Exception as e:  # noqa: BLE001 — the isolation contract
-            row: dict = {c: [None] for c in col_names}
-            row[site_col] = [pdf[site_col].iloc[0] if len(pdf) else None]
-            row["error"] = [f"{type(e).__name__}: {e}"]
-            return pd.DataFrame(row)
-
-    return _wrapped, schema + ", error string"

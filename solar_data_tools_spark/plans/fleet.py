@@ -140,7 +140,7 @@ def run_fleet_pipeline(
     #
     #   standardized -> daily, scores, std_out   (inside run_pipeline)
     #   daily        -> cap, daily_ts, tz, site_days, daily_loss
-    #   scores       -> score_report, cluster_viol, _n, daily_ts
+    #   scores       -> score_report, quality_warn, daily_ts
     #   cap          -> cap_report, daily_loss
     #
     # daily_ts (read by the w1 grid and the shift solve) is a join of
@@ -418,36 +418,23 @@ def run_fleet_pipeline(
 
     # normal_quality_scores (data_handler.py:1171-1196): per score
     # cluster, count days violating the flag thresholds; scores are
-    # "normal" when ANY cluster keeps violations <= max(0.005*n, 1)
+    # "normal" when ANY cluster keeps violations <= max(0.005*n, 1),
+    # i.e. when the cluster with the fewest does (n = the site's days)
     viol = (
         (F.col("linearity") > 0.1)
         | (F.col("density") < 0.6)
         | (F.col("density") > 1.05)
     ).cast("int")
-    cluster_viol = (
+    quality_warn = (
         scores.where(ok)
         .groupBy(site_col, "quality_clustering")
-        .agg(F.sum(viol).alias("_v"))
-    )
-    quality_warn = (
-        cluster_viol.join(
-            scores.where(ok).groupBy(site_col).agg(
-                F.count("*").alias("_n")
-            ),
-            site_col,
-        )
+        .agg(F.sum(viol).alias("_v"), F.count("*").alias("_c"))
         .groupBy(site_col)
         .agg(
-            F.max(
-                (
-                    F.col("_v")
-                    <= F.greatest(F.lit(0.005) * F.col("_n"), F.lit(1.0))
-                ).cast("int")
-            ).alias("_normal_any")
-        )
-        .select(
-            site_col,
-            (F.col("_normal_any") > 0).alias("data_quality_warning"),
+            (
+                F.min("_v")
+                <= F.greatest(F.lit(0.005) * F.sum("_c"), F.lit(1.0))
+            ).alias("data_quality_warning")
         )
     )
 

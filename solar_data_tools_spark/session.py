@@ -45,8 +45,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # NOTE: no minPartitionSize override. CPU-heavy grouped-map
-        # (solver) stages keep their parallelism because grouped_apply /
-        # partition_for_grouped_map use repartition(n, keys), whose
+        # (solver) stages keep their parallelism because grouped_apply
+        # and fit_seasonal_quantile use repartition(n, keys), whose
         # REPARTITION_BY_NUM hint AQE never coalesces (verified by
         # tests/test_plan_audits.py::test_grouped_apply_survives_aqe);
         # relational stages get normal small-partition coalescing.

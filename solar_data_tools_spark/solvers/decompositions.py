@@ -168,18 +168,16 @@ def fit_seasonal_quantile(
 
     Output: (site, date, <value_col>, seasonal_fit).
     """
+    from solar_data_tools_spark.parallel import site_key_type
     from solar_data_tools_spark.shipping import ensure_package_on_executors
     from solar_data_tools_spark.solvers.exact import solve_tl1_l2d2p365_batch
 
     spark = daily.sparkSession
     ensure_package_on_executors(spark)
     schema = (
-        f"{site_col} long, {date_col} date, {value_col} double, "
-        "seasonal_fit double"
+        f"{site_col} {site_key_type(daily, site_col)}, {date_col} date, "
+        f"{value_col} double, seasonal_fit double"
     )
-    site_dtype = dict(daily.dtypes)[site_col]
-    if site_dtype == "string":
-        schema = schema.replace(f"{site_col} long", f"{site_col} string")
     min_rows = 2 * num_harmonics + 2
 
     def _fit_partition(batches):
@@ -228,13 +226,10 @@ def fit_seasonal_quantile(
             }
         )
 
-    from solar_data_tools_spark.parallel import partition_for_grouped_map
-
     # one task wave per core: the per-partition batched solve costs
     # milliseconds, so task-count overhead dominates straggler variance
-    prepared = partition_for_grouped_map(
-        daily.select(site_col, date_col, value_col), [site_col],
-        tasks_per_core=1,
+    prepared = daily.select(site_col, date_col, value_col).repartition(
+        spark.sparkContext.defaultParallelism, site_col
     )
     return prepared.mapInPandas(_fit_partition, schema=schema)
 

@@ -465,7 +465,8 @@ def solve_l2_l1d1_l2d2p365_batch(
     detected support, so the piecewise-constant part is exactly constant
     between jumps. A column that reaches the iteration cap without
     meeting its gap raises ``RuntimeError`` unless its polish passes the
-    KKT check (``parallel.wrap_capture_errors``: a site error row).
+    KKT check; a capturing ``parallel.grouped_apply`` stage turns that
+    into the site's error row.
     """
     y, use, yc, B, q, N = _d1_setup(y, use_ixs, w2, num_harmonics, period)
     w1 = np.atleast_1d(np.asarray(w1, dtype=np.float64))
@@ -590,8 +591,8 @@ def solve_tl1_l2d2p365(
 
     The J=1 call of :func:`solve_tl1_l2d2p365_batch` (fixture-validated).
     A fit that is not finite raises ``FloatingPointError``; inside a
-    fleet stage ``parallel.wrap_capture_errors`` turns it into that
-    site's error row.
+    fleet stage ``parallel.grouped_apply(..., capture_errors=True)``
+    turns it into that site's error row.
     """
     y = np.asarray(y, dtype=np.float64)
     use1 = None if use_ixs is None else np.asarray(use_ixs, dtype=bool)[:, None]

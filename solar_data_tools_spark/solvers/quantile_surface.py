@@ -20,7 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from solar_data_tools_spark.shipping import ensure_package_on_executors
+from solar_data_tools_spark.parallel import site_key_type
 
 
 def product_basis(
@@ -81,10 +81,10 @@ def estimate_quantiles(
 ) -> DataFrame:
     """Fleet D7: dilated long table (site, date, dil_slot, dil_value) ->
     (site, date, dil_slot, level, qvalue) long quantile-surface table."""
-    ensure_package_on_executors(dilated.sparkSession)
-    site_dtype = dict(dilated.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    schema = f"{site_col} {st}, date date, dil_slot int, level double, qvalue double"
+    schema = (
+        f"{site_col} {site_key_type(dilated, site_col)}, date date, "
+        "dil_slot int, level double, qvalue double"
+    )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["date", "dil_slot"]).reset_index(drop=True)
@@ -129,7 +129,6 @@ def detect_clear_sky(
 
     Output: (site, date, dil_slot, is_clear).
     """
-    ensure_package_on_executors(dilated.sparkSession)
     from pyspark.sql import functions as F
 
     q = quantiles.where(F.col("level") == clear_level).select(
@@ -137,9 +136,10 @@ def detect_clear_sky(
     )
     joined = dilated.join(q, on=[site_col, "date", "dil_slot"], how="inner")
 
-    site_dtype = dict(dilated.dtypes)[site_col]
-    st = "string" if site_dtype == "string" else "long"
-    schema = f"{site_col} {st}, date date, dil_slot int, is_clear boolean"
+    schema = (
+        f"{site_col} {site_key_type(dilated, site_col)}, date date, "
+        "dil_slot int, is_clear boolean"
+    )
 
     def _label(pdf: pd.DataFrame) -> pd.DataFrame:
         from solar_data_tools_spark.algorithms.daily_flags import (

@@ -145,8 +145,14 @@ def fit_soiling_sawtooth_with_trend(
        Capacity offsets are re-anchored so the largest regime is 0 and
        the component is nonpositive, matching the reference's
        ``Inequality(vmax=0)`` (:543-550).
-    2. **Soiling stage** — the D5 nonnegative-lasso sawtooth fit
-       (:func:`fit_soiling_sawtooth`) on the envelope residual.
+    2. **Soiling stage** — with the trend and capacity steps fixed, one
+       joint l2 fit of intercept + seasonal + the D5 nonnegative-lasso
+       sawtooth (the same penalties as :func:`fit_soiling_sawtooth`):
+       the smooth block is minimized in closed form and the tooth atoms
+       by exact cyclic coordinate descent.
+
+    Both stages run twice; the second envelope fit sees the series with
+    the first pass's soiling removed.
 
     ``deg_type``: "linear" (slope column in the envelope design),
     "monotone" (the reference's "nonlinear": non-increasing smooth,

@@ -458,15 +458,17 @@ def test_quantile_regression_recovers_seasonal_quantile():
     """Pinball (interior-point) fit on a Fourier basis: residuals must
     split approximately tau / (1-tau) around the fit (the defining
     property of a quantile fit)."""
-    from solar_data_tools_spark.solvers.basis import fourier_basis
-    from solar_data_tools_spark.solvers.exact import pinball_regression
+    from solar_data_tools_spark.solvers.exact import (
+        pinball_regression,
+        trig_basis,
+    )
 
     rng = np.random.default_rng(7)
     n = 730
     t = np.arange(n)
     season = 5.0 + 2.0 * np.sin(2 * np.pi * t / 365.2425)
     y = season + rng.normal(0, 0.5, n)
-    X = fourier_basis(t, num_harmonics=3)
+    X = trig_basis(n, 3)
     for tau in (0.5, 0.9):
         beta = pinball_regression(X, y, tau=tau)
         frac_below = float(np.mean(y <= X @ beta))

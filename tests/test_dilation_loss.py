@@ -150,6 +150,6 @@ def test_mc_degradation_interval_covers_truth(spark):
     assert out["n_samples"] == 8
     assert out["rate_lo"] <= out["rate_median"] <= out["rate_hi"]
     # soiling drift and degradation partly confound on a 3-year series —
-    # the trend absorbs realized soiling drift (the reference handles this
-    # with a sawtooth dictionary; our TV component leaves ~1 %/yr slack)
+    # the trend absorbs realized soiling drift, which the sawtooth
+    # soiling fit does not fully separate (~1 %/yr slack)
     assert out["rate_lo"] - 1.0 <= -1.0 <= out["rate_hi"] + 1.0

@@ -1,8 +1,8 @@
 """Per-group memory budget guard (parallel.py, round 9): one
 pathological group (a 1-second-cadence site, a corrupt fan-in landing
 one site 1000x its share) must fail LOUDLY (grouped_apply) or become a
-per-site error annotation (wrap_capture_errors) — never an executor
-OOM that kills the fleet job."""
+per-site error annotation (grouped_apply(..., capture_errors=True)) —
+never an executor OOM that kills the fleet job."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from solar_data_tools_spark.parallel import grouped_apply, wrap_capture_errors
+from solar_data_tools_spark.parallel import grouped_apply
 
 
 def _fleet_df(spark):
@@ -50,15 +50,12 @@ def test_grouped_apply_no_budget_unchanged(spark):
     assert {r["site"] for r in rows} == {1, 2}
 
 
-def test_wrap_capture_errors_budget_becomes_annotation(spark):
+def test_capture_errors_budget_becomes_annotation(spark):
     """The over-budget site annotates; the small site still solves —
     the fleet-runner isolation contract extends to memory blowups."""
-    fn, schema = wrap_capture_errors(
-        _make_mean_kernel(), "site int, m double", "site",
-        group_budget_bytes=10_000,
-    )
     rows = {r["site"]: r for r in grouped_apply(
-        _fleet_df(spark), ["site"], fn, schema
+        _fleet_df(spark), ["site"], _make_mean_kernel(),
+        "site int, m double", capture_errors=True, group_budget_bytes=10_000,
     ).collect()}
     assert rows[1]["error"] == "No error" and rows[1]["m"] == 4.5
     assert rows[2]["m"] is None
@@ -66,15 +63,60 @@ def test_wrap_capture_errors_budget_becomes_annotation(spark):
     assert "group budget" in rows[2]["error"]
 
 
-def test_wrap_capture_errors_default_budget_is_generous(spark):
+def test_capture_errors_default_budget_is_generous(spark):
     """The 512 MiB default must not trip ordinary fleet groups."""
-    fn, schema = wrap_capture_errors(
-        _make_mean_kernel(), "site int, m double", "site"
-    )
     rows = grouped_apply(
-        _fleet_df(spark), ["site"], fn, schema
+        _fleet_df(spark), ["site"], _make_mean_kernel(),
+        "site int, m double", capture_errors=True,
     ).collect()
     assert all(r["error"] == "No error" for r in rows)
+
+
+def _make_failing_day_kernel(bad_site, bad_date):
+    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        site, date = int(pdf["site"].iloc[0]), pdf["date"].iloc[0]
+        if (site, date) == (bad_site, bad_date):
+            raise ValueError("bad day")
+        return pd.DataFrame(
+            {"site": [site], "date": [date], "m": [float(pdf["v"].mean())]}
+        )
+
+    return _kernel
+
+
+def test_capture_errors_row_carries_every_key(spark):
+    """A capturing stage over (site, date): the failing group's error row
+    holds both of its key values; the healthy groups read "No error"."""
+    import datetime
+
+    d0, d1 = datetime.date(2024, 1, 1), datetime.date(2024, 1, 2)
+    df = _fleet_df(spark).withColumn(
+        "date", F.date_add(F.lit(d0), (F.col("v") % 2).cast("int"))
+    )
+    rows = {
+        (r["site"], r["date"]): r
+        for r in grouped_apply(
+            df, ["site", "date"], _make_failing_day_kernel(2, d1),
+            "site int, date date, m double", capture_errors=True,
+        ).collect()
+    }
+    assert set(rows) == {(1, d0), (1, d1), (2, d0), (2, d1)}
+    bad = rows[(2, d1)]
+    assert bad["m"] is None
+    assert bad["error"] == "ValueError: bad day"
+    for key in ((1, d0), (1, d1), (2, d0)):
+        assert rows[key]["error"] == "No error"
+        assert rows[key]["m"] is not None
+
+
+def test_capture_errors_needs_every_key_in_schema(spark):
+    """An error row fills every key column, so a capturing stage whose
+    schema lacks a key fails when the plan is built."""
+    with pytest.raises(ValueError, match="key columns"):
+        grouped_apply(
+            _fleet_df(spark), ["site"], _make_mean_kernel(), "m double",
+            capture_errors=True,
+        )
 
 
 def test_semdedup_pair_engine_budget(spark):

@@ -125,8 +125,6 @@ def test_pipeline_values_invariant_across_modes(spark, tmp_path):
     base = snap("none")
     assert snap("local") == base
     assert snap("reliable") == base
-    # bool back-compat
-    assert snap(True) == base and snap(False) == base
 
 
 def test_fleet_report_reliable_mode(spark, tmp_path):
