@@ -9,12 +9,16 @@ atom coefficients (stiffness) and on the component itself (sparsity),
 and the component constrained nonpositive.
 
 Restricting coefficients to alpha >= 0 makes the pointwise
-nonpositivity automatic (every atom is <= 0) and turns the fit into a
-nonnegative LASSO solved by monotone FISTA — deterministic numpy, no
-cone solver. The reference allows sign-free coefficients with a
-pointwise constraint; on sawtooth soiling signals the active atoms are
-nonnegative combinations, so the restriction does not change the
-recovered structure (validated on planted sawtooths in
+nonpositivity automatic (every atom is <= 0) and, with the l1 terms
+linear on the orthant, turns the fit into a nonnegative LASSO. The loss
+model fits it jointly with a smooth (intercept + seasonal) block
+(:func:`fit_seasonal_soiling`); after the smooth block is minimized out
+in closed form, :func:`nonneg_lasso` solves the atom problem exactly
+with an active-set method that stops on a KKT certificate —
+deterministic numpy, no cone solver. The reference allows sign-free
+coefficients with a pointwise constraint; on sawtooth soiling signals
+the active atoms are nonnegative combinations, so the restriction does
+not change the recovered structure (validated on planted sawtooths in
 tests/test_soiling_dictionary.py).
 """
 
@@ -57,57 +61,147 @@ def make_sawtooth_dictionary(T: int) -> np.ndarray:
     return np.concatenate(cols, axis=1)
 
 
-def fit_soiling_sawtooth(
-    resid: np.ndarray,
-    w_stiff: float = 5e-2,
-    w_sparse: float = 5e-3,
-    max_iters: int = 1000,
-    tol: float = 1e-9,
-) -> np.ndarray:
-    """Fit the soiling component to a (log-space) residual:
+# Step cap of nonneg_lasso. One step is one entering atom, with the atoms
+# that leave after it; the recorded loss-model fits certify in under 400
+# steps. A solve that reaches the cap raises, and a capturing
+# ``parallel.grouped_apply`` stage turns that into the site's error row.
+_NNLASSO_MAX_STEPS = 2000
+# nonneg_lasso's KKT tolerance, relative to max(1, |h|_inf).
+NNLASSO_TOL = 1e-10
+# An entering atom whose Schur complement is below this share of its own
+# Gram diagonal is treated as dependent on the passive atoms.
+_DEPENDENT_PIVOT = 1e-9
 
-        min ||r - D a||^2 + w_stiff ||a||_1 + w_sparse ||D a||_1
-        s.t. a >= 0            (=> soiling = D a <= 0 pointwise)
 
-    With a >= 0 and D <= 0 both l1 terms are linear, so this is a
-    nonnegative-constrained least squares with a linear offset — solved
-    by monotone FISTA with projection onto the nonnegative orthant.
-    NaNs in ``resid`` are excluded from the data term.
+def nonneg_lasso(G: np.ndarray, h: np.ndarray) -> np.ndarray:
+    """argmin of a'Ga - 2h'a subject to a >= 0, for a PSD ``G`` (K, K).
+
+    An active-set method in the style of Lawson & Hanson (*Solving Least
+    Squares Problems*, 1974, ch. 23) on the Gram form: the atom with the
+    largest positive w_j = (h - Ga)_j enters the passive set P, the
+    passive subproblem G_PP z = h_P is solved, and when z leaves the
+    orthant the step is cut at the first passive atom to reach zero,
+    which leaves. The inverse of G_PP is kept up to date with rank-one
+    bordering formulas as atoms enter and leave. Each passive solve
+    takes one step of iterative refinement, and the inverse is
+    recomputed when the refined residual is above tolerance: the
+    updates drift after many steps on short, noisy series, where a
+    passive set can also pass through a condition number near 1e10
+    before its near-dependent atoms leave. The solve stops on a KKT
+    certificate, w_j <= tol off the passive set and |w_j| <= tol on it,
+    with tol = ``NNLASSO_TOL * max(1, |h|_inf)``; when no atom can
+    enter but the passive residual is above tol, it raises.
+
+    An entering atom that is linearly dependent on the passive ones
+    (``G`` is rank-deficient whenever there are more atoms than samples)
+    has a null direction d, G d = 0, with d_j = 1. The objective falls
+    along it at the rate 2 w_j, so the solve moves along d until a
+    passive atom reaches zero and swaps the two. For the soiling problem
+    h - Ga is orthogonal to the null space up to -c/2 with c > 0, so d
+    always has a negative passive entry and the move is finite.
+
+    Also raises ``RuntimeError`` after ``_NNLASSO_MAX_STEPS`` entering
+    atoms.
     """
-    resid = np.asarray(resid, dtype=np.float64)
-    T = len(resid)
-    use = np.isfinite(resid)
-    D = make_sawtooth_dictionary(T)
-    Du = D[use]
-    ru = resid[use]
-    K = D.shape[1]
-    # linear term: w_stiff * sum(a) + w_sparse * sum(-D a)
-    c = w_stiff - w_sparse * D.sum(axis=0)
-    # Lipschitz constant of the quadratic via power iteration
-    v = np.ones(K) / np.sqrt(K)
-    for _ in range(50):
-        v = Du.T @ (Du @ v)
-        nv = np.linalg.norm(v)
-        if nv == 0:
-            break
-        v /= nv
-    L = 2.0 * max(nv, 1e-12)
-    step = 1.0 / L
-    a = np.zeros(K)
-    z = a.copy()
-    t_mom = 1.0
-    best = np.inf
-    for _ in range(max_iters):
-        grad = 2.0 * (Du.T @ (Du @ z - ru)) + c
-        a_new = np.maximum(z - step * grad, 0.0)
-        t_new = 0.5 * (1.0 + np.sqrt(1.0 + 4.0 * t_mom**2))
-        z = a_new + ((t_mom - 1.0) / t_new) * (a_new - a)
-        move = float(np.max(np.abs(a_new - a), initial=0.0))
-        a, t_mom = a_new, t_new
-        scale = float(np.abs(ru).max()) if len(ru) else 1.0
-        if move < tol * max(1.0, scale):
-            break
-    return D @ a
+    tol = NNLASSO_TOL * max(1.0, float(np.abs(h).max(initial=0.0)))
+    a = np.zeros(len(h))
+    P = np.zeros(0, dtype=np.intp)  # passive atoms, in the order of H
+    H = np.zeros((0, 0))  # inverse of G[P][:, P]
+    w = h.copy()
+
+    def leave(P, H, step):
+        """Move a_P along ``step`` until its first entry reaches zero and
+        drop that atom. Returns the new P and H and the step length."""
+        aP = a[P]
+        neg = step < 0
+        ratio = np.full(len(P), np.inf)
+        ratio[neg] = aP[neg] / -step[neg]
+        i = int(np.argmin(ratio))
+        aP += ratio[i] * step
+        aP[i] = 0.0
+        a[P] = np.maximum(aP, 0.0)
+        k = np.arange(len(P)) != i
+        H = H[np.ix_(k, k)] - np.outer(H[k, i], H[i, k]) / H[i, i]
+        return P[k], H, ratio[i]
+
+    def passive_solve(P, H):
+        """G_PP z = h_P with one refinement step, on a fresh inverse when
+        the kept one leaves a residual above tolerance. Returns z and
+        the inverse used."""
+        GP = G[np.ix_(P, P)]
+        for fresh in (False, True):
+            if fresh:
+                H = np.linalg.inv(GP)
+            z = H @ h[P]
+            z += H @ (h[P] - GP @ z)
+            if np.abs(h[P] - GP @ z).max(initial=0.0) <= tol:
+                break
+        return z, H
+
+    for _ in range(_NNLASSO_MAX_STEPS):
+        free = w.copy()
+        free[P] = -np.inf
+        j = int(np.argmax(free))
+        if free[j] <= tol:
+            if np.abs(w[P]).max(initial=0.0) <= tol:
+                return a
+            raise RuntimeError(
+                "soiling_sawtooth: active-set solve ended without a KKT "
+                "certificate")
+        u = H @ G[P, j]
+        s = G[j, j] - G[P, j] @ u
+        if s <= _DEPENDENT_PIVOT * G[j, j]:
+            # null direction: d_P = -G_PP^-1 G_Pj, d_j = 1 (w is unchanged)
+            P, H, a[j] = leave(P, H, -u)
+            u = H @ G[P, j]
+            s = G[j, j] - G[P, j] @ u
+        k = len(P)
+        grown = np.empty((k + 1, k + 1))
+        grown[:k, :k] = H + np.outer(u, u) / s
+        grown[:k, k] = grown[k, :k] = -u / s
+        grown[k, k] = 1.0 / s
+        P, H = np.append(P, j), grown
+        z, H = passive_solve(P, H)
+        while (z <= 0).any():
+            P, H, _ = leave(P, H, z - a[P])
+            z, H = passive_solve(P, H)
+        a[P] = z
+        w = h - G[:, P] @ z
+    raise RuntimeError(
+        "soiling_sawtooth: active-set solve did not converge in "
+        f"{_NNLASSO_MAX_STEPS} steps")
+
+
+def fit_seasonal_soiling(
+    r: np.ndarray,
+    use: np.ndarray,
+    S: np.ndarray,
+    q: np.ndarray,
+    D: np.ndarray,
+    c: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact joint l2 fit of a smooth block and the sawtooth atoms:
+
+        min_{w, a >= 0}  ||r_u - S_u w - D_u a||^2 + w' diag(q) w + c'a
+
+    over the rows ``use``. The smooth block is minimized out in closed
+    form, which leaves the nonnegative lasso a'Ga - 2h'a over the atoms
+    (:func:`nonneg_lasso`). Returns (w, a).
+
+    The elimination goes through a QR factor of S_u stacked on
+    sqrt(diag(q)) rather than the inverse of S_u'S_u + diag(q): on short
+    series the annual harmonics are nearly collinear with the
+    intercept, and the inverse put errors near 1e-10 into G.
+    """
+    Su, Du, ru = S[use], D[use], r[use]
+    # a 1e-12 ridge keeps R invertible when q has zeros and rows are few
+    Q, R = np.linalg.qr(np.vstack([Su, np.diag(np.sqrt(q + 1e-12))]))
+    Q = Q[: len(ru)]
+    E = Q.T @ Du
+    G = Du.T @ Du - E.T @ E
+    h = Du.T @ ru - E.T @ (Q.T @ ru) - 0.5 * c
+    a = nonneg_lasso(G, h)
+    return np.linalg.solve(R, Q.T @ (ru - Du @ a)), a
 
 
 def fit_soiling_sawtooth_with_trend(
@@ -118,8 +212,6 @@ def fit_soiling_sawtooth_with_trend(
     num_harmonics: int = 2,
     w_seasonal: float = 1e-3,
     period: float = 365.2425,
-    max_iters: int = 5000,
-    tol: float = 1e-9,
     capacity_labels: np.ndarray | None = None,
     deg_type: str = "linear",
     deg_rate: float | None = None,
@@ -146,10 +238,9 @@ def fit_soiling_sawtooth_with_trend(
        the component is nonpositive, matching the reference's
        ``Inequality(vmax=0)`` (:543-550).
     2. **Soiling stage** — with the trend and capacity steps fixed, one
-       joint l2 fit of intercept + seasonal + the D5 nonnegative-lasso
-       sawtooth (the same penalties as :func:`fit_soiling_sawtooth`):
-       the smooth block is minimized in closed form and the tooth atoms
-       by exact cyclic coordinate descent.
+       exact joint l2 fit of intercept + seasonal + the nonnegative-lasso
+       sawtooth over the full dictionary, penalties ``w_stiff ||a||_1 +
+       w_sparse ||D a||_1`` (:func:`fit_seasonal_soiling`).
 
     Both stages run twice; the second envelope fit sees the series with
     the first pass's soiling removed.
@@ -264,63 +355,10 @@ def fit_soiling_sawtooth_with_trend(
             )
         return deg
 
-    def _joint_seasonal_soiling(r_target: np.ndarray):
-        """Joint l2 fit of intercept + seasonal + sawtooth soiling (the
-        trend/capacity are FIXED by the envelope stage, which removes
-        the tooth-gradient <-> trend degeneracy this solve would
-        otherwise have). Partial minimization over the smooth block +
-        exact cyclic coordinate descent on the nonneg tooth atoms; this
-        l2 competition is what allocates a period-matched sawtooth to
-        the teeth rather than the seasonal harmonics (the envelope
-        regression alone absorbs the tooth fundamental into the
-        coincident harmonic)."""
-        S = np.hstack([np.ones((T, 1)), B])
-        Su = S[use]
-        Du = Dteeth[use]
-        ru = r_target[use]
-        q_smooth = np.concatenate([[0.0], qs])
-        A = Su.T @ Su + np.diag(q_smooth) + 1e-12 * np.eye(1 + p)
-        Ainv = np.linalg.inv(A)
-        proj = Su @ (Ainv @ Su.T)
-        c = w_stiff - w_sparse * Dteeth.sum(axis=0)
-        MDu = Du - proj @ Du
-        G = Du.T @ MDu
-        g = MDu.T @ ru
-        K = Dteeth.shape[1]
-        a = np.zeros(K)
-        uacc = np.zeros(K)
-        diag = np.maximum(np.diag(G), 1e-12)
-        scale = float(np.abs(ru).max()) if len(ru) else 1.0
-        n_sweeps = max(30, max_iters // 50)
-        for _ in range(n_sweeps):
-            max_move = 0.0
-            for j in range(K):
-                new = max(
-                    0.0, a[j] + (g[j] - uacc[j] - 0.5 * c[j]) / diag[j]
-                )
-                delta = new - a[j]
-                if delta != 0.0:
-                    uacc += G[:, j] * delta
-                    a[j] = new
-                    max_move = max(max_move, abs(delta))
-            if max_move < tol * max(1.0, scale):
-                break
-        w_sm = Ainv @ (Su.T @ (ru - Du @ a))
-        return float(w_sm[0]), B @ w_sm[1:], Dteeth @ a
-
     Dteeth = make_sawtooth_dictionary(T)
-    if T < 365:
-        # Short-series perf path only: the reference's k=2..31 grid is
-        # built for multi-year series; on a month-scale series most
-        # atoms span <3 days and can only fit noise, while the
-        # coordinate-descent cost is O(K^2) in the atom count (observed
-        # 0.4 s/site on 27-day fleets, nearly all on ~1000 one-day
-        # atoms). Series of a year or more keep the FULL reference
-        # dictionary — including boundary-clipped partial teeth — so
-        # the parity model space (loss_factor_analysis.py:759-780) is
-        # untouched where the reference is actually used.
-        support = (Dteeth < 0).sum(axis=0)
-        Dteeth = Dteeth[:, support >= 3]
+    S = np.hstack([np.ones((T, 1)), B])
+    q_smooth = np.concatenate([[0.0], qs])
+    c = w_stiff - w_sparse * Dteeth.sum(axis=0)
 
     # Stage A — envelope quantile regression identifies the trend and
     # capacity steps (nonpositive soiling cannot pull the tau=0.9
@@ -358,8 +396,12 @@ def fit_soiling_sawtooth_with_trend(
         else:
             beta = slope
             deg_series = slope * years
+        # the l2 competition between the smooth block and the teeth is
+        # what allocates a period-matched sawtooth to the teeth rather
+        # than the coincident seasonal harmonic
         r_fixed = y_work - capacity - (deg_series - deg_fixed)
-        b, seasonal, soiling = _joint_seasonal_soiling(
-            np.where(use, r_fixed, 0.0)
+        w_sm, alpha = fit_seasonal_soiling(
+            r_fixed, use, S, q_smooth, Dteeth, c
         )
+        b, seasonal, soiling = float(w_sm[0]), B @ w_sm[1:], Dteeth @ alpha
     return float(b), float(beta), seasonal, soiling, capacity, deg_series

@@ -296,6 +296,49 @@ def test_stalled_capacity_solve_is_a_site_error(spark, monkeypatch):
     )
 
 
+def test_stalled_soiling_solve_is_a_site_error(spark, monkeypatch):
+    """A D5 soiling solve that reaches the active-set step cap without a
+    KKT certificate (the cap forced to 1 inside the executor) is not
+    returned as "No error": the site gets an error row."""
+    from solar_data_tools_spark import parallel
+    from solar_data_tools_spark.algorithms.loss_factors import (
+        run_loss_factor_analysis,
+    )
+
+    import pandas as pd
+
+    real = parallel.grouped_apply
+
+    def capped(df, keys, fn, schema, **kwargs):
+        def run(pdf):
+            from solar_data_tools_spark.solvers import soiling
+
+            cap = soiling._NNLASSO_MAX_STEPS
+            soiling._NNLASSO_MAX_STEPS = 1
+            try:
+                return fn(pdf)
+            finally:
+                soiling._NNLASSO_MAX_STEPS = cap
+
+        return real(df, keys, run, schema, **kwargs)
+
+    monkeypatch.setattr(parallel, "grouped_apply", capped)
+    t = np.arange(120)
+    energy = (10.0 + np.sin(2 * np.pi * t / 365.2425)) * (
+        1.0 - 0.004 * (t % 30)
+    ) * np.random.default_rng(5).normal(1.0, 0.01, 120)
+    dates = pd.date_range("2024-01-01", periods=120).date
+    pdf = pd.DataFrame({"site": 1, "date": dates, "energy": energy})
+    out = run_loss_factor_analysis(
+        spark.createDataFrame(pdf), capture_errors=True
+    ).toPandas()
+    assert len(out) == 1
+    assert out.error.iloc[0] == (
+        "RuntimeError: soiling_sawtooth: active-set solve did not "
+        "converge in 1 steps"
+    )
+
+
 def test_capacity_change_labels_on_step(spark):
     from solar_data_tools_spark.algorithms.daily_flags import (
         detect_capacity_changes,
