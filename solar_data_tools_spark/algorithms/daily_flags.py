@@ -8,6 +8,8 @@ task — SURVEY §7.4 risk 4). All cores are deterministic numpy.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -67,6 +69,62 @@ def detect_clear_days(
 
 
 # -------------------------------------------------------- capacity change
+# each stage's output fields after (site, date)
+CAPACITY_FIELDS = "cap_level double, capacity_label int, cap_changed boolean"
+TIME_SHIFT_FIELDS = "noon_pwc double, noon_seasonal double, shift_hours double"
+
+
+def capacity_change_kernel(
+    pdf: pd.DataFrame, metric_col: str, site_col: str, w1: float,
+    round_base: float,
+) -> pd.DataFrame:
+    """The per-site kernel of :func:`detect_capacity_changes`."""
+    from solar_data_tools_spark.solvers.exact import (
+        solve_l1_pwc_smoothper_trend,
+    )
+
+    pdf = pdf.sort_values("date").reset_index(drop=True)
+    metric = pdf[metric_col].to_numpy(dtype=np.float64)
+    finite = np.isfinite(metric)
+    if finite.sum() >= 16:
+        level_full, _seas, _lin, _obj = solve_l1_pwc_smoothper_trend(
+            metric, w2=w1, period=min(float(len(metric)), 365.2425)
+        )
+        # Label ALL days from the solved pwc component — the TV
+        # penalty carries the level flat through data gaps, so gap
+        # days inherit the surrounding regime instead of producing a
+        # spurious change on both gap edges (reference
+        # capacity_change.py:100-103 labels the full s1 series).
+        # The masked level is kept only for the REPORTED cap_level.
+        base0 = level_full[0]
+        rounded = (
+            np.round((level_full - base0) / round_base) * round_base + base0
+        )
+        level = np.where(finite, level_full, np.nan)
+    else:
+        level = np.where(finite, metric, np.nan)
+        rounded = np.zeros(len(metric))
+    # labels: dense rank of distinct levels in order of appearance
+    labels = np.zeros(len(rounded), dtype=np.int32)
+    seen: dict[float, int] = {}
+    for i, v in enumerate(rounded):
+        key = float(v)
+        if key not in seen:
+            seen[key] = len(seen)
+        labels[i] = seen[key]
+    changed = np.zeros(len(labels), dtype=bool)
+    changed[1:] = labels[1:] != labels[:-1]
+    return pd.DataFrame(
+        {
+            site_col: pdf[site_col],
+            "date": pdf["date"],
+            "cap_level": level,
+            "capacity_label": labels,
+            "cap_changed": changed,
+        }
+    )
+
+
 def detect_capacity_changes(
     daily: DataFrame,
     metric_col: str = "log_day_max",
@@ -90,60 +148,66 @@ def detect_capacity_changes(
     """
     schema = (
         f"{site_col} {site_key_type(daily, site_col)}, date date, "
-        "cap_level double, capacity_label int, cap_changed boolean"
+        + CAPACITY_FIELDS
+    )
+    kernel = partial(
+        capacity_change_kernel, metric_col=metric_col, site_col=site_col,
+        w1=w1, round_base=round_base,
+    )
+    return grouped_apply(
+        daily.select(site_col, "date", metric_col), [site_col], kernel,
+        schema, capture_errors=capture_errors,
     )
 
-    def _detect(pdf: pd.DataFrame) -> pd.DataFrame:
-        from solar_data_tools_spark.solvers.exact import (
-            solve_l1_pwc_smoothper_trend,
-        )
 
-        pdf = pdf.sort_values("date").reset_index(drop=True)
-        metric = pdf[metric_col].to_numpy(dtype=np.float64)
-        finite = np.isfinite(metric)
-        if finite.sum() >= 16:
-            level_full, _seas, _lin, _obj = solve_l1_pwc_smoothper_trend(
-                metric, w2=w1, period=min(float(len(metric)), 365.2425)
-            )
-            # Label ALL days from the solved pwc component — the TV
-            # penalty carries the level flat through data gaps, so gap
-            # days inherit the surrounding regime instead of producing a
-            # spurious change on both gap edges (reference
-            # capacity_change.py:100-103 labels the full s1 series).
-            # The masked level is kept only for the REPORTED cap_level.
-            base0 = level_full[0]
-            rounded = (
-                np.round((level_full - base0) / round_base) * round_base
-                + base0
-            )
-            level = np.where(finite, level_full, np.nan)
+# ------------------------------------------------------------ time shifts
+def time_shift_kernel(
+    pdf: pd.DataFrame, noon_col: str, site_col: str, w1: float,
+    min_shift_hours: float, use_col: str | None, w1_col: str | None,
+    round_to_hour: bool, baseline: str,
+) -> pd.DataFrame:
+    """The per-site kernel of :func:`detect_time_shifts`."""
+    from solar_data_tools_spark.solvers.decompositions import (
+        l2_l1d1_l2d2p365_fit,
+    )
+
+    pdf = pdf.sort_values("date").reset_index(drop=True)
+    noon = pdf[noon_col].to_numpy(dtype=np.float64)
+    if use_col is not None:
+        use = pdf[use_col].fillna(False).to_numpy(dtype=bool)
+        noon = np.where(use & np.isfinite(noon), noon, np.nan)
+    eff_w1 = w1
+    if w1_col is not None:
+        v = pdf[w1_col].dropna()
+        if len(v):
+            eff_w1 = float(v.iloc[0])
+    pwc, seasonal = l2_l1d1_l2d2p365_fit(
+        noon, w1=eff_w1, period=min(len(pdf), 365.2425)
+    )
+    if np.all(np.isnan(pwc)):
+        shift = np.full(len(noon), np.nan)
+    else:
+        finite = pwc[np.isfinite(pwc)]
+        base = finite[0]
+        if baseline == "nearest_noon" and (
+            np.abs(base - 12.0) > 0.9
+            or np.sum(finite == base) / len(finite) < 0.02
+        ):
+            vals = np.unique(finite)
+            base = vals[np.argmin(np.abs(vals - 12.0))]
+        raw = base - pwc  # correction toward the baseline clock
+        if round_to_hour:
+            shift = np.round(raw)
         else:
-            level = np.where(finite, metric, np.nan)
-            rounded = np.zeros(len(metric))
-        # labels: dense rank of distinct levels in order of appearance
-        labels = np.zeros(len(rounded), dtype=np.int32)
-        seen: dict[float, int] = {}
-        for i, v in enumerate(rounded):
-            key = float(v)
-            if key not in seen:
-                seen[key] = len(seen)
-            labels[i] = seen[key]
-        changed = np.zeros(len(labels), dtype=bool)
-        changed[1:] = labels[1:] != labels[:-1]
-        return pd.DataFrame(
-            {
-                site_col: pdf[site_col],
-                "date": pdf["date"],
-                "cap_level": level,
-                "capacity_label": labels,
-                "cap_changed": changed,
-            }
-        )
-
-    cols = [site_col, "date", metric_col]
-    return grouped_apply(
-        daily.select(*cols), [site_col], _detect, schema,
-        capture_errors=capture_errors,
+            shift = np.where(np.abs(raw) >= min_shift_hours, raw, 0.0)
+    return pd.DataFrame(
+        {
+            site_col: pdf[site_col],
+            "date": pdf["date"],
+            "noon_pwc": pwc,
+            "noon_seasonal": seasonal,
+            "shift_hours": shift,
+        }
     )
 
 
@@ -189,58 +253,16 @@ def detect_time_shifts(
     """
     schema = (
         f"{site_col} {site_key_type(daily, site_col)}, date date, "
-        "noon_pwc double, noon_seasonal double, shift_hours double"
+        + TIME_SHIFT_FIELDS
     )
-
-    def _detect(pdf: pd.DataFrame) -> pd.DataFrame:
-        from solar_data_tools_spark.solvers.decompositions import (
-            l2_l1d1_l2d2p365_fit,
-        )
-
-        pdf = pdf.sort_values("date").reset_index(drop=True)
-        noon = pdf[noon_col].to_numpy(dtype=np.float64)
-        if use_col is not None:
-            use = pdf[use_col].fillna(False).to_numpy(dtype=bool)
-            noon = np.where(use & np.isfinite(noon), noon, np.nan)
-        eff_w1 = w1
-        if w1_col is not None:
-            v = pdf[w1_col].dropna()
-            if len(v):
-                eff_w1 = float(v.iloc[0])
-        pwc, seasonal = l2_l1d1_l2d2p365_fit(
-            noon, w1=eff_w1, period=min(len(pdf), 365.2425)
-        )
-        if np.all(np.isnan(pwc)):
-            shift = np.full(len(noon), np.nan)
-        else:
-            finite = pwc[np.isfinite(pwc)]
-            base = finite[0]
-            if baseline == "nearest_noon" and (
-                np.abs(base - 12.0) > 0.9
-                or np.sum(finite == base) / len(finite) < 0.02
-            ):
-                vals = np.unique(finite)
-                base = vals[np.argmin(np.abs(vals - 12.0))]
-            raw = base - pwc  # correction toward the baseline clock
-            if round_to_hour:
-                shift = np.round(raw)
-            else:
-                shift = np.where(np.abs(raw) >= min_shift_hours, raw, 0.0)
-        return pd.DataFrame(
-            {
-                site_col: pdf[site_col],
-                "date": pdf["date"],
-                "noon_pwc": pwc,
-                "noon_seasonal": seasonal,
-                "shift_hours": shift,
-            }
-        )
-
-    cols = [site_col, "date", noon_col]
-    cols += [use_col] if use_col else []
-    cols += [w1_col] if w1_col else []
+    kernel = partial(
+        time_shift_kernel, noon_col=noon_col, site_col=site_col, w1=w1,
+        min_shift_hours=min_shift_hours, use_col=use_col, w1_col=w1_col,
+        round_to_hour=round_to_hour, baseline=baseline,
+    )
+    cols = [c for c in (site_col, "date", noon_col, use_col, w1_col) if c]
     return grouped_apply(
-        daily.select(*cols), [site_col], _detect, schema,
+        daily.select(*cols), [site_col], kernel, schema,
         capture_errors=capture_errors,
     )
 

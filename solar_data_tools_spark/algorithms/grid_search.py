@@ -10,12 +10,14 @@ batch axis of the D1 interior-point core), then an argmin per site.
 
 from __future__ import annotations
 
+import math
+from functools import partial
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from solar_data_tools_spark.parallel import site_key_type
+from solar_data_tools_spark.parallel import grouped_apply, site_key_type
 
 
 def grid_holdout_mse(
@@ -47,6 +49,50 @@ def grid_holdout_mse(
         return np.where(cnt > 0, sq.sum(axis=0) / cnt, np.inf)
 
 
+_LONG_MAX = (1 << 63) - 1
+
+
+def pick_w1(w1_grid, mse: np.ndarray, selection: str, knee_tol: float) -> int:
+    """Index of the grid point ``selection`` picks from one site's
+    holdout errors (see :func:`tune_time_shift_w1`). The argmin compares
+    integer 1e-6 ticks (the q143 recipe; ties to the smaller w1, inf
+    last), so the pick is replayable from the emitted MSE by integer
+    comparison alone."""
+    w = [float(v) for v in w1_grid]
+    if selection == "knee":
+        cand = np.flatnonzero(mse <= mse.min() * (1.0 + float(knee_tol)))
+        return int(cand[np.argmax(np.asarray(w)[cand])])
+    ticks = [
+        _LONG_MAX if m == np.inf else min(math.floor(m * 1e6 + 0.5), _LONG_MAX)
+        for m in mse
+    ]
+    return min(range(len(w)), key=lambda i: (ticks[i], w[i]))
+
+
+def w1_grid_kernel(
+    pdf: pd.DataFrame, w1_grid, holdout_frac: float, seed: int,
+    noon_col: str, site_col: str, use_col: str | None, selection: str,
+    knee_tol: float,
+) -> pd.DataFrame:
+    """The per-site kernel of :func:`tune_time_shift_w1`."""
+    pdf = pdf.sort_values("date").reset_index(drop=True)
+    y = pdf[noon_col].to_numpy(dtype=np.float64)
+    if use_col is not None:
+        use = pdf[use_col].fillna(False).to_numpy(dtype=bool)
+        y = np.where(use & np.isfinite(y), y, np.nan)
+    mse = grid_holdout_mse(y, w1_grid, holdout_frac, seed)
+    i = pick_w1(w1_grid, mse, selection, knee_tol)
+    return pd.DataFrame(
+        {
+            site_col: [pdf[site_col].iloc[0]],
+            "best_w1": [float(w1_grid[i])],
+            "holdout_mse": [float(mse[i])],
+            # every site solves exactly len(w1_grid) points
+            "n_grid": [len(w1_grid)],
+        }
+    )
+
+
 def tune_time_shift_w1(
     daily: DataFrame,
     w1_grid: list[float] | None = None,
@@ -63,8 +109,9 @@ def tune_time_shift_w1(
 
     For each site: fit D1 on the train days at every w1 of the grid in
     one batched solve, score pinball-free MSE of (pwc + seasonal) on the
-    holdout days (:func:`grid_holdout_mse`). Returns the per-site best
-    row: (site, best_w1, holdout_mse, n_grid).
+    holdout days (:func:`grid_holdout_mse`), and pick one grid point
+    (:func:`pick_w1`). Returns the per-site best row: (site, best_w1,
+    holdout_mse, n_grid).
 
     ``use_col`` masks the fit to good days (the reference's use_ixs,
     time_shifts.py:65-69). ``selection="knee"`` picks the LARGEST w1
@@ -77,71 +124,14 @@ def tune_time_shift_w1(
     """
     if w1_grid is None:
         w1_grid = [float(w) for w in np.logspace(-1, 1.5, 11)]
-    sel_cols = [site_col, "date", noon_col] + ([use_col] if use_col else [])
-
     schema = (
-        f"{site_col} {site_key_type(daily, site_col)}, w1 double, "
-        "holdout_mse double"
+        f"{site_col} {site_key_type(daily, site_col)}, best_w1 double, "
+        "holdout_mse double, n_grid long"
     )
-
-    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("date").reset_index(drop=True)
-        y = pdf[noon_col].to_numpy(dtype=np.float64)
-        if use_col is not None:
-            use = pdf[use_col].fillna(False).to_numpy(dtype=bool)
-            y = np.where(use & np.isfinite(y), y, np.nan)
-        return pd.DataFrame(
-            {
-                site_col: pdf[site_col].iloc[0],
-                "w1": [float(w) for w in w1_grid],
-                "holdout_mse": grid_holdout_mse(y, w1_grid, holdout_frac, seed),
-            }
-        )
-
-    from solar_data_tools_spark.parallel import grouped_apply
-
-    scores = grouped_apply(daily.select(*sel_cols), [site_col], _score, schema)
-    # Integer-tick ranking key (round 9, r8 verdict item 4 — the q143
-    # recipe): the per-(site, w1) MSE is bit-deterministic (a site's
-    # grid solves in ONE task over date-sorted input), but the ARGMIN
-    # comparison itself should not ride raw doubles — quantize to 1e-6
-    # ticks (LONG) so the selected w1 is replayable from the emitted
-    # mse values by integer comparison alone. inf (no holdout days)
-    # ranks last via the LONG_MAX sentinel.
-    _mse_fp = F.when(
-        F.col("holdout_mse") == float("inf"),
-        F.lit((1 << 63) - 1).cast("long"),
-    ).otherwise(
-        F.floor(F.col("holdout_mse") * F.lit(1e6) + F.lit(0.5)).cast(
-            "long"
-        )
+    kernel = partial(
+        w1_grid_kernel, w1_grid=w1_grid, holdout_frac=holdout_frac,
+        seed=seed, noon_col=noon_col, site_col=site_col, use_col=use_col,
+        selection=selection, knee_tol=knee_tol,
     )
-    scores = scores.withColumn("_mse_fp", _mse_fp)
-    if selection == "knee":
-        # largest w1 within (1 + knee_tol) of the per-site minimum error
-        min_mse = Window.partitionBy(site_col)
-        scores = scores.withColumn(
-            "_min", F.min("holdout_mse").over(min_mse)
-        ).where(
-            F.col("holdout_mse")
-            <= F.col("_min") * F.lit(1.0 + float(knee_tol))
-        )
-        pick = Window.partitionBy(site_col).orderBy(F.desc("w1"))
-    else:
-        pick = Window.partitionBy(site_col).orderBy(
-            F.asc("_mse_fp"), F.asc("w1")
-        )
-    return (
-        scores.withColumn("_rn", F.row_number().over(pick))
-        .where(F.col("_rn") == 1)
-        .select(
-            site_col,
-            F.col("w1").alias("best_w1"),
-            F.col("holdout_mse"),
-            # _score returns one row per grid point (inf without holdout
-            # days), so every site solves exactly len(w1_grid) points; a
-            # count joined back from the grid output would run the solve
-            # twice
-            F.lit(len(w1_grid)).cast("long").alias("n_grid"),
-        )
-    )
+    cols = [site_col, "date", noon_col] + ([use_col] if use_col else [])
+    return grouped_apply(daily.select(*cols), [site_col], kernel, schema)

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import itertools
 import math
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -164,6 +165,50 @@ def shapley_attribution(component_sums: dict[str, float]) -> dict[str, float]:
     return {f: marginals[f] / n_perms for f in factors}
 
 
+# the stage's output fields after the site
+LOSS_FIELDS = (
+    "degradation_rate_pct_per_year double, loss_seasonal double, "
+    "loss_degradation double, loss_soiling double, loss_capacity double"
+)
+
+
+def loss_factor_kernel(
+    pdf: pd.DataFrame, energy_col: str, site_col: str,
+    label_col: str | None, deg_type: str,
+) -> pd.DataFrame:
+    """The per-site kernel of :func:`run_loss_factor_analysis`."""
+    pdf = pdf.sort_values("date").reset_index(drop=True)
+    labels = pdf[label_col].to_numpy() if label_col is not None else None
+    comps = fit_loss_components(
+        pdf[energy_col].to_numpy(),
+        capacity_labels=labels,
+        deg_type=deg_type,
+    )
+    n = max(len(pdf), 1)
+    sums = {
+        "seasonal": float(np.nansum(np.minimum(comps["seasonal"], 0.0))) / n,
+        "degradation": float(
+            np.nansum(np.minimum(comps["degradation"], 0.0))
+        )
+        / n,
+        "soiling": float(np.nansum(comps["soiling"])) / n,
+        "capacity": float(np.nansum(comps["capacity"])) / n,
+    }
+    attr = shapley_attribution(sums)
+    return pd.DataFrame(
+        {
+            site_col: [pdf[site_col].iloc[0]],
+            "degradation_rate_pct_per_year": [
+                comps["degradation_rate_pct_per_year"]
+            ],
+            "loss_seasonal": [attr["seasonal"]],
+            "loss_degradation": [attr["degradation"]],
+            "loss_soiling": [attr["soiling"]],
+            "loss_capacity": [attr["capacity"]],
+        }
+    )
+
+
 def run_loss_factor_analysis(
     daily: DataFrame,
     energy_col: str = "energy",
@@ -180,54 +225,16 @@ def run_loss_factor_analysis(
     the capacity component so capacity steps are attributed separately
     (``loss_capacity``) instead of contaminating soiling/degradation.
     """
-    schema = (
-        f"{site_col} {site_key_type(daily, site_col)}, "
-        "degradation_rate_pct_per_year double, loss_seasonal double, "
-        "loss_degradation double, loss_soiling double, loss_capacity double"
+    schema = f"{site_col} {site_key_type(daily, site_col)}, " + LOSS_FIELDS
+    kernel = partial(
+        loss_factor_kernel, energy_col=energy_col, site_col=site_col,
+        label_col=label_col, deg_type=deg_type,
     )
-
-    def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("date").reset_index(drop=True)
-        labels = (
-            pdf[label_col].to_numpy() if label_col is not None else None
-        )
-        comps = fit_loss_components(
-            pdf[energy_col].to_numpy(),
-            capacity_labels=labels,
-            deg_type=deg_type,
-        )
-        n = max(len(pdf), 1)
-        sums = {
-            "seasonal": float(np.nansum(np.minimum(comps["seasonal"], 0.0)))
-            / n,
-            "degradation": float(
-                np.nansum(np.minimum(comps["degradation"], 0.0))
-            )
-            / n,
-            "soiling": float(np.nansum(comps["soiling"])) / n,
-            "capacity": float(np.nansum(comps["capacity"])) / n,
-        }
-        attr = shapley_attribution(sums)
-        return pd.DataFrame(
-            {
-                site_col: [pdf[site_col].iloc[0]],
-                "degradation_rate_pct_per_year": [
-                    comps["degradation_rate_pct_per_year"]
-                ],
-                "loss_seasonal": [attr["seasonal"]],
-                "loss_degradation": [attr["degradation"]],
-                "loss_soiling": [attr["soiling"]],
-                "loss_capacity": [attr["capacity"]],
-            }
-        )
-
     from solar_data_tools_spark.parallel import grouped_apply
 
-    cols = [site_col, "date", energy_col] + (
-        [label_col] if label_col is not None else []
-    )
+    cols = [c for c in (site_col, "date", energy_col, label_col) if c]
     return grouped_apply(
-        daily.select(*cols), [site_col], _fit, schema,
+        daily.select(*cols), [site_col], kernel, schema,
         capture_errors=capture_errors,
     )
 

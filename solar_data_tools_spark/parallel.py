@@ -77,6 +77,7 @@ TASKS_PER_CORE = 4
 # made per-GROUP without per-key streaming (a batch legitimately mixes
 # many small groups, and one group legitimately spans many batches).
 DEFAULT_GROUP_BUDGET_BYTES = 512 * 1024 * 1024
+NO_ERROR = "No error"  # the error column of a stage that returned
 
 
 def site_key_type(df: DataFrame, site_col: str) -> str:
@@ -100,6 +101,33 @@ def _check_group_budget(
         )
 
 
+def capture_site_errors(
+    fn: Callable[[pd.DataFrame], pd.DataFrame],
+    pdf: pd.DataFrame,
+    columns: list[str],
+    keys: list[str],
+    budget: int | None = DEFAULT_GROUP_BUDGET_BYTES,
+) -> pd.DataFrame:
+    """``fn(pdf)`` under the fleet runner's per-site isolation contract
+    (reference sdt_dask/dask_tool/runner.py:53-146): an ``error`` column
+    of ``NO_ERROR``; or, if the budget check or ``fn`` raises, one row of
+    ``pdf``'s ``keys`` values, nulls in the other ``columns`` and
+    ``"Type: message"`` in ``error``. Used per group by
+    ``grouped_apply(capture_errors=True)`` and per stage by a chain of
+    stages in one task."""
+    try:
+        _check_group_budget(pdf, budget, "per-site group")
+        out = fn(pdf).copy()
+        out["error"] = NO_ERROR
+        return out
+    except Exception as e:  # noqa: BLE001 — the isolation contract
+        row: dict = {c: [None] for c in columns}
+        for k in keys:
+            row[k] = [pdf[k].iloc[0]]
+        row["error"] = [f"{type(e).__name__}: {e}"]
+        return pd.DataFrame(row)
+
+
 def grouped_apply(
     df: DataFrame,
     keys: list[str],
@@ -120,22 +148,19 @@ def grouped_apply(
 
     A group over ``group_budget_bytes`` raises ``MemoryError``.
 
-    ``capture_errors=True`` is the fleet-runner per-site isolation
-    contract (reference sdt_dask/dask_tool/runner.py:53-146): the output
-    gains an ``error string`` column, "No error" on every row of a group
-    whose kernel returned; a group whose kernel (or budget check) raises
-    becomes one row holding its key values, nulls elsewhere and
-    ``"Type: message"`` in ``error``, instead of failing the fleet job.
-    Capturing stages default the budget to
-    ``DEFAULT_GROUP_BUDGET_BYTES``, so an over-budget site is annotated
-    before its kernel allocates solver state. Every key must be a column
-    of ``schema`` (``ValueError`` otherwise, when the plan is built).
+    ``capture_errors=True`` runs each group through
+    :func:`capture_site_errors`, so a failing group is an error row, not
+    a failed job, and adds its ``error string`` column. Capturing stages
+    default the budget to ``DEFAULT_GROUP_BUDGET_BYTES``, so an
+    over-budget site is annotated before its kernel allocates solver
+    state. Every key must be a column of ``schema`` (``ValueError``
+    otherwise, when the plan is built).
     """
     from solar_data_tools_spark.shipping import ensure_package_on_executors
 
     spark = df.sparkSession
     key_list = list(keys)
-    budget, what = group_budget_bytes, "grouped_apply"
+    budget, col_names = group_budget_bytes, []
     if capture_errors:
         from pyspark.sql.types import StructType
 
@@ -148,26 +173,14 @@ def grouped_apply(
             )
         if budget is None:
             budget = DEFAULT_GROUP_BUDGET_BYTES
-        what = "per-site group"
         schema = schema + ", error string"
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_group_budget(pdf, budget, what)
+    def apply_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        if capture_errors:
+            return capture_site_errors(fn, pdf, col_names, key_list, budget)
+        _check_group_budget(pdf, budget, "grouped_apply")
         return fn(pdf)
 
-    def capture_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        try:
-            out = run_group(pdf).copy()
-            out["error"] = "No error"
-            return out
-        except Exception as e:  # noqa: BLE001 — the isolation contract
-            row: dict = {c: [None] for c in col_names}
-            for k in key_list:
-                row[k] = [pdf[k].iloc[0]]
-            row["error"] = [f"{type(e).__name__}: {e}"]
-            return pd.DataFrame(row)
-
-    apply_group = capture_group if capture_errors else run_group
     ensure_package_on_executors(spark)
     n = max(spark.sparkContext.defaultParallelism * TASKS_PER_CORE, 1)
     prepared = df.repartition(n, *keys)

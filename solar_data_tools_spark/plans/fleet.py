@@ -29,33 +29,64 @@ time_zone_correction  ``tz_correction`` (whole hours,
 
 Error columns (the runner contract): ``get_data_error`` (min-data guard,
 data_handler.py:391-394), ``scoring_error``, ``capacity_change_error``,
-``time_shift_error`` — each "No error" or the captured message — plus
-``run_pipeline_error`` summarizing the first failing stage.
+``time_shift_error`` (a failed w1-grid solve lands here too) and
+``run_loss_analysis_error`` — each "No error" or the captured message
+— plus ``run_pipeline_error`` summarizing the first failing stage
+before the loss leg.
 
 Execution shape at fleet scale: the relational stages (standardize,
 daily stats, report assembly) are plain DataFrame aggregations — two
-keyed shuffles fleet-wide; the solver stages run as one grouped-map
-task per site (``grouped_apply``), so 1000 executors process 1000
-sites concurrently and a single site's failure is isolated to its task.
+keyed shuffles fleet-wide. The solvers run in two grouped-map passes
+(``grouped_apply``) of one task per site: scoring over the standardized
+grid, then, as the reference runner does (runner.py:53-175), the
+dependent chain capacity (D3) -> w1 grid (D1 batch) -> time shift (D1)
+-> loss (D5) over the daily table joined with the score flags, each
+step under its own error capture. 1000 executors process 1000 sites
+concurrently and a site's failure stays in its task.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from solar_data_tools_spark.algorithms.daily_flags import (
+    CAPACITY_FIELDS,
+    TIME_SHIFT_FIELDS,
     apply_time_shift_correction,
-    detect_capacity_changes,
-    detect_time_shifts,
+    capacity_change_kernel,
+    time_shift_kernel,
+)
+from solar_data_tools_spark.algorithms.grid_search import w1_grid_kernel
+from solar_data_tools_spark.algorithms.loss_factors import (
+    LOSS_FIELDS,
+    loss_factor_kernel,
 )
 from solar_data_tools_spark.algorithms.scoring import daily_quality_scores
+from solar_data_tools_spark.parallel import (
+    NO_ERROR,
+    capture_site_errors,
+    grouped_apply,
+    site_key_type,
+)
 from solar_data_tools_spark.plans.pipeline import run_pipeline
 from solar_data_tools_spark.session import materialize_df
 
-_NOERR = "No error"
+# the runner's loss gate (runner.py:117-122)
+_LOSS_GATE = (
+    "The length of data is less than or equal to 1 year, loss "
+    "analysis will fail thus is not performed."
+)
+_NOT_REQUESTED = "Loss analysis not requested"
+
+
+def _names(fields: str) -> list[str]:
+    return [f.split()[0] for f in fields.split(", ")]
 
 
 @dataclass
@@ -97,18 +128,19 @@ def run_fleet_pipeline(
     ``materialize`` picks the fault-tolerance mode
     (``session.materialize_df``) of every stage output the report reads
     more than once — the standardized grid, the daily table, the
-    per-day scores and the capacity labels — so each solver stage runs
-    once per site: ``"local"`` (default — executor-local DISK_ONLY
-    blocks, fastest, but an executor loss fails the job, so use on
+    per-day scores and the solver chain's output — so each solver
+    kernel runs once per site: ``"local"`` (default — executor-local
+    DISK_ONLY blocks, fastest, but an executor loss fails the job, so use on
     local[k] or dedicated non-preemptible clusters), ``"reliable"``
     (checkpoint into ``spark.sparkContext.setCheckpointDir`` — one DFS
     write per table, survives executor loss; the right mode for long
     fleet jobs on preemptible/spot executors — r11 verdict item 3), or
-    ``"none"`` (fully lazy; the grid chain and the scoring and
-    capacity kernels re-execute per consumer — only for plan audits).
+    ``"none"`` (fully lazy; the grid chain, the scoring kernel and the
+    solver chain re-execute per consumer — only for plan audits).
 
     ``run_loss_analysis=True`` chains the loss-factor leg of the fleet
-    runner (``run_loss_factor_analysis`` + ``loss_analysis.report()``,
+    runner (the kernel of ``run_loss_factor_analysis`` +
+    ``loss_analysis.report()``,
     runner.py:147-175): sites with more than a year of data get the
     degradation rate and Shapley loss attribution; sites at <= 365 days
     get the runner's own gate message ("length of data is less than or
@@ -139,13 +171,12 @@ def run_fleet_pipeline(
     # ``shared`` exactly once:
     #
     #   standardized -> daily, scores, std_out   (inside run_pipeline)
-    #   daily        -> cap, daily_ts, tz, site_days, daily_loss
-    #   scores       -> score_report, quality_warn, daily_ts
-    #   cap          -> cap_report, daily_loss
+    #   daily        -> chain, tz
+    #   scores       -> score_report, quality_warn, chain
+    #   chain        -> cap, shifts (std_out), chain_report
     #
-    # daily_ts (read by the w1 grid and the shift solve) is a join of
-    # two shared tables and runs no kernel; every other stage output
-    # (tuned w1, shifts, loss) has one consumer and stays lazy.
+    # cap and shifts are projections of the one chain table and run no
+    # kernel.
     def shared(df: DataFrame) -> DataFrame:
         return materialize_df(df, materialize)
 
@@ -189,55 +220,88 @@ def run_fleet_pipeline(
         )
     )
 
-    # ---- flag stages on the daily table (error-isolated)
-    cap = shared(
-        detect_capacity_changes(daily, site_col=site_col, capture_errors=True)
+    # ---- the dependent solver chain, one grouped-map task per site:
+    # capacity (D3) -> w1 grid (D1 batch) -> time shift (D1) -> loss
+    # (D5), each step under its own error capture (the runner's
+    # per-stage isolation, runner.py:53-175). Time shifts follow the
+    # reference defaults (data_handler.py:1330-1414): srss solar noon,
+    # fit masked to clear days when clearness >= 0.3 else no-error
+    # days, corrections rounded to whole hours.
+    flag_cols = scores.where(F.col("error") == NO_ERROR).select(
+        site_col, "date", "clear", "no_errors", "data_clearness_score"
     )
-    # time shifts per the reference defaults (data_handler.py:1330-1414):
-    # srss solar noon, fit masked to clear days when clearness >= 0.3
-    # else no-error days, corrections rounded to whole hours
-    flag_cols = scores.where(F.col("error") == _NOERR).select(
-        site_col,
-        "date",
-        "clear",
-        "no_errors",
-        "data_clearness_score",
-    )
-    daily_ts = daily.join(flag_cols, [site_col, "date"], "left")
     use = F.when(
         F.col("data_clearness_score") >= 0.3, F.col("clear")
     ).otherwise(F.col("no_errors"))
-    daily_ts = daily_ts.withColumn("_use", F.coalesce(use, F.lit(False)))
-    if time_shift_w1 is None:
-        # the reference's w1=None meta-opt (time_shifts.py:70-110):
-        # per-site holdout grid over logspace(-1, 2, 11), parsimony
-        # ("knee") pick; the tuned table is site-sized — broadcast back
-        from solar_data_tools_spark.algorithms.grid_search import (
-            tune_time_shift_w1,
-        )
-        import numpy as np
+    chain_in = daily.join(flag_cols, [site_col, "date"], "left").select(
+        site_col, "date", "log_day_max", "solar_noon_rs", "energy",
+        F.coalesce(use, F.lit(False)).alias("_use"),
+    )
+    keys = [site_col]
+    cap_cols = [site_col, "date", *_names(CAPACITY_FIELDS)]
+    shift_cols = [site_col, "date", *_names(TIME_SHIFT_FIELDS)]
+    loss_cols = _names(LOSS_FIELDS)
+    capacity = partial(
+        capacity_change_kernel, metric_col="log_day_max",
+        site_col=site_col, w1=0.5, round_base=0.05,
+    )
+    # the reference's w1=None meta-opt (time_shifts.py:70-110): holdout
+    # grid over logspace(-1, 2, 11), parsimony ("knee") pick
+    w1_pick = partial(
+        w1_grid_kernel, w1_grid=[float(w) for w in np.logspace(-1, 2, 11)],
+        holdout_frac=0.15, seed=42, noon_col="solar_noon_rs",
+        site_col=site_col, use_col="_use", selection="knee", knee_tol=0.05,
+    )
+    time_shift = partial(
+        time_shift_kernel, noon_col="solar_noon_rs", site_col=site_col,
+        min_shift_hours=0.25, use_col="_use", w1_col=None,
+        round_to_hour=round_shifts_to_hour, baseline="nearest_noon",
+    )
+    loss_fit = partial(
+        loss_factor_kernel, energy_col="energy", site_col=site_col,
+        label_col="capacity_label", deg_type="linear",
+    )
 
-        tuned = tune_time_shift_w1(
-            daily_ts,
-            w1_grid=[float(w) for w in np.logspace(-1, 2, 11)],
-            noon_col="solar_noon_rs",
-            site_col=site_col,
-            use_col="_use",
-            selection="knee",
-        ).select(site_col, F.col("best_w1").alias("_w1"))
-        daily_ts = daily_ts.join(F.broadcast(tuned), site_col, "left")
-        w1_kwargs = {"w1_col": "_w1"}
-    else:
-        w1_kwargs = {"w1": float(time_shift_w1)}
-    shifts = detect_time_shifts(
-        daily_ts,
-        noon_col="solar_noon_rs",
-        site_col=site_col,
-        use_col="_use",
-        round_to_hour=round_shifts_to_hour,
-        baseline="nearest_noon",
-        capture_errors=True,
-        **w1_kwargs,
+    def shift_step(pdf: pd.DataFrame) -> pd.DataFrame:
+        w1 = time_shift_w1
+        if w1 is None:  # a failed grid solve is the site's shift error
+            w1 = w1_pick(pdf)["best_w1"].iloc[0]
+        return time_shift(pdf, w1=float(w1))
+
+    def site_chain(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("date").reset_index(drop=True)
+        cap = capture_site_errors(capacity, pdf, cap_cols, keys)
+        shifts = capture_site_errors(shift_step, pdf, shift_cols, keys)
+        # the runner's loss leg (runner.py:147-175), gated like the
+        # runner at > 365 days; capacity labels are 0 when D3 failed
+        if run_loss_analysis and len(pdf) > 365:
+            cap_ok = cap["error"].iloc[0] == NO_ERROR
+            labels = cap["capacity_label"].to_numpy() if cap_ok else 0
+            loss = capture_site_errors(
+                loss_fit, pdf.assign(capacity_label=labels),
+                [site_col, *loss_cols], keys,
+            )
+        else:
+            gate = _LOSS_GATE if run_loss_analysis else _NOT_REQUESTED
+            loss = pdf[keys].iloc[:1].assign(error=gate)
+        parts = [
+            cap.assign(part="cap"),
+            shifts.assign(part="shift"),
+            loss.assign(part="loss"),
+        ]
+        return pd.concat(parts, ignore_index=True).reindex(
+            columns=_names(chain_schema)
+        )
+
+    chain_schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, part string, "
+        f"date date, {CAPACITY_FIELDS}, {TIME_SHIFT_FIELDS}, "
+        f"{LOSS_FIELDS}, error string"
+    )
+    chain = shared(grouped_apply(chain_in, keys, site_chain, chain_schema))
+    cap = chain.where(F.col("part") == "cap").select(*cap_cols, "error")
+    shifts = chain.where(F.col("part") == "shift").select(
+        *shift_cols, "error"
     )
 
     # ---- standardized output: optional shift fix + tz roll
@@ -249,14 +313,13 @@ def run_fleet_pipeline(
                 F.col("grid_seconds").cast("long").alias("_samp_s"),
             )
             base = std_out.join(F.broadcast(samp), site_col)
-            us_col = F.col("_samp_s") * F.lit(1_000_000)
             spd_expr = (F.lit(86400) / F.col("_samp_s")).cast("int")
         else:
             base = std_out.withColumn(
                 "_samp_s", F.lit(int(86400 // slots_per_day))
             )
-            us_col = F.col("_samp_s") * F.lit(1_000_000)
             spd_expr = F.lit(int(slots_per_day))
+        us_col = F.col("_samp_s") * F.lit(1_000_000)
         std_meas = base.select(
             site_col,
             F.col("grid_ts").alias("ts"),
@@ -274,7 +337,7 @@ def run_fleet_pipeline(
         )
         fixed = apply_time_shift_correction(
             std_meas,
-            shifts.where(F.col("error") == _NOERR),
+            shifts.where(F.col("error") == NO_ERROR),
             "_spd",
             site_col=site_col,
         )
@@ -340,66 +403,8 @@ def run_fleet_pipeline(
             .drop("time_zone_correction")
         )
 
-    # ---- loss-factor leg (the fleet runner's second stage pair,
-    # runner.py:147-175), gated exactly like the runner: > 365 days
-    _LOSS_GATE = (
-        "The length of data is less than or equal to 1 year, loss "
-        "analysis will fail thus is not performed."
-    )
-    loss_cols = [
-        "degradation_rate_pct_per_year",
-        "loss_seasonal",
-        "loss_degradation",
-        "loss_soiling",
-        "loss_capacity",
-    ]
-    site_days = daily.groupBy(site_col).agg(
-        F.count("*").alias("_nd")
-    )
-    if run_loss_analysis:
-        from solar_data_tools_spark.algorithms.loss_factors import (
-            run_loss_factor_analysis,
-        )
-
-        eligible = site_days.where(F.col("_nd") > 365).select(site_col)
-        daily_loss = (
-            daily.join(
-                cap.where(F.col("error") == _NOERR).select(
-                    site_col, "date", "capacity_label"
-                ),
-                [site_col, "date"],
-                "left",
-            )
-            .join(F.broadcast(eligible), site_col, "left_semi")
-            .withColumn(
-                "capacity_label",
-                F.coalesce(F.col("capacity_label"), F.lit(0)),
-            )
-        )
-        loss = run_loss_factor_analysis(
-            daily_loss,
-            site_col=site_col,
-            label_col="capacity_label",
-            capture_errors=True,
-        )
-        loss_report = site_days.join(loss, site_col, "left").select(
-            site_col,
-            *loss_cols,
-            F.when(F.col("_nd") <= 365, F.lit(_LOSS_GATE))
-            .otherwise(F.coalesce(F.col("error"), F.lit(_NOERR)))
-            .alias("run_loss_analysis_error"),
-        )
-    else:
-        loss_report = site_days.select(
-            site_col,
-            *[F.lit(None).cast("double").alias(c) for c in loss_cols],
-            F.lit("Loss analysis not requested").alias(
-                "run_loss_analysis_error"
-            ),
-        )
-
     # ---- report assembly (all relational, one agg per stage table)
-    ok = F.col("error") == _NOERR
+    ok = F.col("error") == NO_ERROR
     score_report = scores.groupBy(site_col).agg(
         F.count("date").alias("num_days"),
         F.first("capacity_estimate", ignorenulls=True).alias("capacity"),
@@ -438,21 +443,28 @@ def run_fleet_pipeline(
         )
     )
 
-    cap_report = cap.groupBy(site_col).agg(
-        (F.max(F.col("cap_changed").cast("int")) > 0).alias(
-            "capacity_change"
-        ),
-        F.first("error").alias("capacity_change_error"),
-    )
-    # the reference flags time_shifts when the roll series has a
+    # the chain's report fields in one aggregation, each over its part.
+    # The reference flags time_shifts when the roll series has a
     # CHANGEPOINT (data_handler.py:1411-1414, len(index_set) > 0) — a
     # constant offset is a baseline choice, not a shift; >= 2 distinct
     # roll values <=> at least one step
-    shift_report = shifts.groupBy(site_col).agg(
-        (F.count_distinct("shift_hours") > 1).alias(
+    def of(part: str, c: str):
+        return F.when(F.col("part") == part, F.col(c))
+
+    def first(part: str, c: str):
+        return F.first(of(part, c), ignorenulls=True)
+
+    chain_report = chain.groupBy(site_col).agg(
+        (F.max(of("cap", "cap_changed").cast("int")) > 0).alias(
+            "capacity_change"
+        ),
+        first("cap", "error").alias("capacity_change_error"),
+        (F.count_distinct(of("shift", "shift_hours")) > 1).alias(
             "time_shift_correction"
         ),
-        F.first("error").alias("time_shift_error"),
+        first("shift", "error").alias("time_shift_error"),
+        *[first("loss", c).alias(c) for c in loss_cols],
+        first("loss", "error").alias("run_loss_analysis_error"),
     )
     # the reference's data_sampling is the GRID cadence — report the
     # snapped per-site grid when in native-cadence mode
@@ -468,50 +480,37 @@ def run_fleet_pipeline(
 
     report = (
         score_report.join(quality_warn, site_col, "left")
-        .join(cap_report, site_col, "left")
-        .join(shift_report, site_col, "left")
+        .join(chain_report, site_col, "left")
         .join(sampling_report, site_col, "left")
         .join(tz, site_col, "left")
-        .join(loss_report, site_col, "left")
-        .withColumn("get_data_error", F.lit(_NOERR))
+        .withColumn("get_data_error", F.lit(NO_ERROR))
     )
     # failed get_data sites: one row each, null metrics; downstream
     # stage errors carry the runner's own cascade message
     # (runner.py:103-108: "get_data error lead to nothing")
-    _CASCADE = F.lit("get_data error lead to nothing")
+    cascade = F.lit("get_data error lead to nothing")
     failed = bad_sites.select(
         site_col,
-        F.lit(None).cast("long").alias("num_days"),
-        F.lit(None).cast("double").alias("capacity"),
-        F.lit(None).cast("double").alias("quality_score"),
-        F.lit(None).cast("double").alias("clearness_score"),
-        F.lit(None).cast("boolean").alias("inverter_clipping"),
-        F.lit(None).cast("double").alias("clipped_fraction"),
-        _CASCADE.alias("scoring_error"),
-        F.lit(None).cast("boolean").alias("data_quality_warning"),
-        F.lit(None).cast("boolean").alias("capacity_change"),
-        _CASCADE.alias("capacity_change_error"),
-        F.lit(None).cast("boolean").alias("time_shift_correction"),
-        _CASCADE.alias("time_shift_error"),
-        F.lit(None).cast("double").alias("sampling_minutes"),
-        F.lit(None).cast("int").alias("time_zone_correction"),
-        *[F.lit(None).cast("double").alias(c) for c in loss_cols],
-        _CASCADE.alias("run_loss_analysis_error"),
-        F.col("get_data_error"),
+        "get_data_error",
+        *[
+            (cascade if c.endswith("_error") else F.lit(None).cast(t)).alias(c)
+            for c, t in report.dtypes
+            if c not in (site_col, "get_data_error")
+        ],
     )
-    report = report.select(failed.columns).unionByName(failed)
+    report = report.unionByName(failed)
 
     first_err = F.coalesce(
-        F.when(F.col("get_data_error") != _NOERR, F.col("get_data_error")),
-        F.when(F.col("scoring_error") != _NOERR, F.col("scoring_error")),
-        F.when(
-            F.col("capacity_change_error") != _NOERR,
-            F.col("capacity_change_error"),
-        ),
-        F.when(
-            F.col("time_shift_error") != _NOERR, F.col("time_shift_error")
-        ),
-        F.lit(_NOERR),
+        *[
+            F.when(F.col(c) != NO_ERROR, F.col(c))
+            for c in (
+                "get_data_error",
+                "scoring_error",
+                "capacity_change_error",
+                "time_shift_error",
+            )
+        ],
+        F.lit(NO_ERROR),
     )
     report = report.select(
         site_col,

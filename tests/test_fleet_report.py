@@ -239,54 +239,209 @@ def test_loss_analysis_leg(spark):
     assert off["run_loss_analysis_error"] == "Loss analysis not requested"
 
 
-def test_fleet_report_runs_each_kernel_once_per_group(spark, monkeypatch):
-    """One report action calls every grouped-map kernel exactly once per
-    group: a stage output with several consumers (scores, capacity
-    labels, the w1 grid) is materialized, not recomputed per consumer.
-    Each ``grouped_apply`` call gets its own accumulator, named by the
-    stage function that made the call."""
-    import sys
+def _counted(kernel, acc):
+    # a closure made by a factory pickles BY VALUE, so it runs on the
+    # executors (a test-module function would pickle by reference)
+    def run(pdf, **kwargs):
+        acc.add(1)
+        return kernel(pdf, **kwargs)
 
+    return run
+
+
+def test_fleet_report_runs_each_kernel_once_per_group(spark, monkeypatch):
+    """One report action makes two grouped-map passes (scoring, then the
+    per-site solver chain) and calls every per-site kernel exactly once
+    per site: a stage output with several consumers (the scores, the
+    chain table) is materialized, not recomputed per consumer."""
     from solar_data_tools_spark import parallel
-    from solar_data_tools_spark.algorithms import daily_flags, scoring
-    from solar_data_tools_spark.plans.fleet import fleet_report
+    from solar_data_tools_spark.algorithms import scoring
+    from solar_data_tools_spark.plans import fleet
 
     real = parallel.grouped_apply
-    stages = []  # (stage, input, keys, accumulator)
+    stages = []  # (input, keys, accumulator)
 
     def counting(df, keys, fn, schema, **kwargs):
         acc = spark.sparkContext.accumulator(0)
+        stages.append((df, keys, acc))
+        return real(df, keys, _counted(fn, acc), schema, **kwargs)
 
-        def counted(pdf):
-            acc.add(1)
-            return fn(pdf)
-
-        stages.append((sys._getframe(1).f_code.co_name, df, keys, acc))
-        return real(df, keys, counted, schema, **kwargs)
-
-    for mod in (parallel, scoring, daily_flags):
+    kernels = {}
+    for name in (
+        "capacity_change_kernel",
+        "w1_grid_kernel",
+        "time_shift_kernel",
+        "loss_factor_kernel",
+    ):
+        kernels[name] = spark.sparkContext.accumulator(0)
+        monkeypatch.setattr(
+            fleet, name, _counted(getattr(fleet, name), kernels[name])
+        )
+    for mod in (parallel, scoring, fleet):
         monkeypatch.setattr(mod, "grouped_apply", counting)
-    rep = fleet_report(
+    rep = fleet.fleet_report(
         _loss_fleet(spark), sampling_seconds=900, run_loss_analysis=True
     ).toPandas()
-    calls = {name: acc.value for name, _, _, acc in stages}
+    calls = [acc.value for _, _, acc in stages]
     assert len(rep) == 2
     assert (rep["run_pipeline_error"] == "No error").all()
-    assert len(calls) == len(stages) == 5
+    assert len(stages) == 2  # scoring, then the solver chain
     # the calls are read above: the jobs that count the groups below
-    # rerun the lazy stages and would inflate them
-    groups = {
-        name: df.select(*keys).distinct().count()
-        for name, df, keys, _ in stages
+    # rerun the lazy stage inputs
+    groups = [df.select(*keys).distinct().count() for df, keys, _ in stages]
+    assert groups == [2, 2]
+    assert calls == groups  # scoring 2 and the chain 2
+    assert {name: acc.value for name, acc in kernels.items()} == {
+        "capacity_change_kernel": 2,
+        "w1_grid_kernel": 2,  # a site's 11-point grid is one batch
+        "time_shift_kernel": 2,
+        "loss_factor_kernel": 1,  # the 400-day site only
     }
-    assert groups == {
-        "daily_quality_scores": 2,
-        "detect_capacity_changes": 2,
-        "tune_time_shift_w1": 2,  # a site's 11-point grid is one batch
-        "detect_time_shifts": 2,
-        "run_loss_factor_analysis": 1,  # the 400-day site only
+
+
+def _shift_fleet(spark, late_slots):
+    """60 days of a 15-min bell per site; from day 30 on, site ``s`` runs
+    ``late_slots[s]`` slots late (4 slots = 1 hour)."""
+    slots = 96
+    hod = np.arange(slots) * 24.0 / slots
+    bell = np.clip(np.sin((hod - 6.0) / 12.0 * np.pi), 0.0, None) * 4.0
+    rows = []
+    for site, late in late_slots.items():
+        for d in range(60):
+            base = pd.Timestamp("2024-02-01") + pd.Timedelta(days=d)
+            shift = late if d >= 30 else 0
+            for i in range(slots):
+                rows.append(
+                    (site, base + pd.Timedelta(minutes=15 * i),
+                     float(bell[(i - shift) % slots]))
+                )
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["site", "ts", "value"])
+    ).select("site", "ts", F.monotonically_increasing_id().alias("seq"),
+             "value")
+
+
+def _stalled_grid(kernel, site):
+    def run(pdf, **kwargs):
+        from solar_data_tools_spark.solvers import exact
+
+        cap = exact._TV_IPM_MAX_ITERS
+        if pdf["site"].iloc[0] == site:
+            exact._TV_IPM_MAX_ITERS = 1
+        try:
+            return kernel(pdf, **kwargs)
+        finally:
+            exact._TV_IPM_MAX_ITERS = cap
+
+    return run
+
+
+def test_stalled_w1_grid_solve_is_a_site_time_shift_error(spark, monkeypatch):
+    """A w1-grid solve that stalls inside the executor (the interior-point
+    cap forced to 1 for one site's grid step only: the capacity and
+    shift solves run the same core) becomes that site's
+    time_shift_error instead of failing the fleet job; the other site's
+    report row stays clean."""
+    from solar_data_tools_spark.plans import fleet
+
+    monkeypatch.setattr(
+        fleet, "w1_grid_kernel", _stalled_grid(fleet.w1_grid_kernel, 7)
+    )
+    rep = {
+        r["site"]: r
+        for r in fleet.fleet_report(_shift_fleet(spark, {7: 4, 8: 4}))
+        .collect()
     }
-    assert calls == groups
+    stalled = (
+        "RuntimeError: l2_l1d1_l2d2p365: interior-point solve (w1=0.1) "
+        "did not converge in 1 iterations"
+    )
+    assert rep[7]["time_shift_error"] == stalled
+    assert rep[7]["capacity_change_error"] == "No error"
+    assert rep[7]["run_pipeline_error"] == stalled
+    assert rep[8]["run_pipeline_error"] == "No error"
+    assert rep[8]["time_shift_correction"] is True
+
+
+def _failing(kernel, site, zero_labels=None):
+    def run(pdf, **kwargs):
+        if zero_labels is not None:
+            zero_labels.add(int((pdf["capacity_label"] == 0).all()))
+        if pdf["site"].iloc[0] == site:
+            raise RuntimeError("forced failure")
+        return kernel(pdf, **kwargs)
+
+    return run
+
+
+def _fleet_frames(res):
+    return {
+        name: sorted(map(tuple, getattr(res, name).collect()), key=str)
+        for name in ("capacity_changes", "time_shifts", "report")
+    }
+
+
+@pytest.fixture(scope="module")
+def loss_fleet_frames(spark):
+    from solar_data_tools_spark.plans.fleet import run_fleet_pipeline
+
+    return _fleet_frames(
+        run_fleet_pipeline(
+            _loss_fleet(spark), sampling_seconds=900,
+            run_loss_analysis=True, time_shift_w1=5.0,
+        )
+    )
+
+
+@pytest.mark.parametrize(
+    "kernel, frame",
+    [
+        ("capacity_change_kernel", "capacity_changes"),
+        ("time_shift_kernel", "time_shifts"),
+        ("loss_factor_kernel", "report"),
+    ],
+)
+def test_chain_stage_failure_is_that_stages_error_row(
+    spark, monkeypatch, loss_fleet_frames, kernel, frame
+):
+    """A chain stage that raises for one site gives that stage's frame
+    exactly one row for the site (the key, nulls, the error string),
+    the other site's rows stay as they were, and the loss fit still
+    runs, on all-zero labels, when the capacity stage failed."""
+    from solar_data_tools_spark.plans import fleet
+
+    error = "RuntimeError: forced failure"
+    monkeypatch.setattr(fleet, kernel, _failing(getattr(fleet, kernel), 0))
+    zero_labels = spark.sparkContext.accumulator(0)
+    if kernel == "capacity_change_kernel":
+        monkeypatch.setattr(
+            fleet, "loss_factor_kernel",
+            _failing(fleet.loss_factor_kernel, None, zero_labels),
+        )
+    res = fleet.run_fleet_pipeline(
+        _loss_fleet(spark), sampling_seconds=900, run_loss_analysis=True,
+        time_shift_w1=5.0,
+    )
+    frames = _fleet_frames(res)
+    for name, rows in frames.items():
+        assert [r for r in rows if r[0] == 1] == [
+            r for r in loss_fleet_frames[name] if r[0] == 1
+        ], name
+    report = res.report.where("site = 0").collect()[0]
+    if frame == "report":
+        assert report["run_loss_analysis_error"] == error
+        assert report["degradation_rate_pct_per_year"] is None
+        assert report["loss_soiling"] is None
+    else:
+        failed = [r for r in frames[frame] if r[0] == 0]
+        assert len(failed) == 1
+        assert failed[0][-1] == error
+        assert all(v is None for v in failed[0][1:-1])
+        assert report["run_pipeline_error"] == error
+    if kernel == "capacity_change_kernel":
+        assert zero_labels.value == 1
+        assert report["run_loss_analysis_error"] == "No error"
+        assert report["degradation_rate_pct_per_year"] is not None
 
 
 def test_per_site_native_cadence_fleet(spark):
@@ -344,23 +499,7 @@ def test_planted_time_shift_detected_and_fixed(spark):
     grid so the post-fix energy center of mass agrees across halves."""
     from solar_data_tools_spark.plans.fleet import run_fleet_pipeline
 
-    slots = 96
-    hod = np.arange(slots) * 24.0 / slots
-    bell = np.clip(np.sin((hod - 6.0) / 12.0 * np.pi), 0.0, None) * 4.0
-    rows = []
-    for d in range(60):
-        base = pd.Timestamp("2024-02-01") + pd.Timedelta(days=d)
-        shift = 4 if d >= 30 else 0  # 4 slots = 1 hour late
-        for i in range(slots):
-            rows.append(
-                (7, base + pd.Timedelta(minutes=15 * i),
-                 float(bell[(i - shift) % slots]))
-            )
-    meas = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["site", "ts", "value"])
-    ).select("site", "ts", F.monotonically_increasing_id().alias("seq"),
-             "value")
-    res = run_fleet_pipeline(meas, fix_shifts=True)
+    res = run_fleet_pipeline(_shift_fleet(spark, {7: 4}), fix_shifts=True)
     r = res.report.collect()[0]
     assert r["run_pipeline_error"] == "No error"
     assert bool(r["time_shift_correction"]) is True

@@ -55,6 +55,24 @@ def test_w1_grid_search_picks_sensible_regularization(spark):
     assert (out.best_w1 == 1.0).all(), out
 
 
+def test_pick_w1_ticks_and_knee():
+    """The w1 pick on one site's holdout errors: the argmin compares 1e-6
+    integer ticks (a sub-tick gap is a tie, won by the smaller w1; inf
+    ranks last) and the knee takes the largest w1 within knee_tol of the
+    minimum."""
+    from solar_data_tools_spark.algorithms.grid_search import pick_w1
+
+    grid = [0.1, 1.0, 10.0]
+
+    def pick(mse, selection="argmin"):
+        return pick_w1(grid, np.array(mse), selection, 0.05)
+
+    assert pick([1.0 + 1e-8, 1.0, np.inf]) == 0
+    assert pick([np.inf, np.inf, 2.0]) == 2
+    assert pick([1.0, 1.04, 1.2], "knee") == 1
+    assert pick([np.inf, np.inf, np.inf], "knee") == 2
+
+
 def test_w1_grid_search_bit_equal_across_partitionings(spark):
     """r8 verdict item 4: the selected w1 AND the emitted holdout MSE
     must be bit-identical regardless of input partitioning or shuffle
