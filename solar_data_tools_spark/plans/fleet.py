@@ -241,6 +241,12 @@ def run_fleet_pipeline(
     cap_cols = [site_col, "date", *_names(CAPACITY_FIELDS)]
     shift_cols = [site_col, "date", *_names(TIME_SHIFT_FIELDS)]
     loss_cols = _names(LOSS_FIELDS)
+    chain_schema = (
+        f"{site_col} {site_key_type(daily, site_col)}, part string, "
+        f"date date, {CAPACITY_FIELDS}, {TIME_SHIFT_FIELDS}, "
+        f"{LOSS_FIELDS}, error string"
+    )
+    chain_cols = _names(chain_schema)
     capacity = partial(
         capacity_change_kernel, metric_col="log_day_max",
         site_col=site_col, w1=0.5, round_base=0.05,
@@ -289,15 +295,8 @@ def run_fleet_pipeline(
             shifts.assign(part="shift"),
             loss.assign(part="loss"),
         ]
-        return pd.concat(parts, ignore_index=True).reindex(
-            columns=_names(chain_schema)
-        )
+        return pd.concat(parts, ignore_index=True).reindex(columns=chain_cols)
 
-    chain_schema = (
-        f"{site_col} {site_key_type(daily, site_col)}, part string, "
-        f"date date, {CAPACITY_FIELDS}, {TIME_SHIFT_FIELDS}, "
-        f"{LOSS_FIELDS}, error string"
-    )
     chain = shared(grouped_apply(chain_in, keys, site_chain, chain_schema))
     cap = chain.where(F.col("part") == "cap").select(*cap_cols, "error")
     shifts = chain.where(F.col("part") == "shift").select(
