@@ -1068,33 +1068,37 @@ def quantize_embeddings(
         ).where(F.size("_v") > 0)
 
         def _quant(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.stack(pdf["_v"].to_numpy())
-                lo = mat.min(axis=1)
-                hi = mat.max(axis=1)
-                scale = hi - lo
-                safe = np.where(scale == 0.0, 1.0, scale)
-                q = np.floor(
-                    (mat - lo[:, None]) * levels / safe[:, None] + 0.5
-                ).astype(np.int32)
-                q[scale == 0.0] = 0
-                dq = lo[:, None] + q.astype(np.float64) * scale[:, None] / levels
-                err = np.abs(mat - dq)
-                tot = np.zeros(len(mat))
-                for j in range(mat.shape[1]):  # sequential fold == expr
-                    tot += err[:, j]
-                yield pd.DataFrame(
-                    {
-                        "_id": pdf["_id"].to_numpy(),
-                        "vmin": lo,
-                        "vmax": hi,
-                        "quantized": [list(map(int, r)) for r in q],
-                        "mean_abs_err": tot / mat.shape[1],
-                        "max_abs_err": err.max(axis=1),
-                    }
-                )
+            for batch in batches:
+                # one batch may mix vector lengths: stack each length apart
+                lengths = batch["_v"].map(len)
+                for _, pdf in batch.groupby(lengths, sort=False):
+                    mat = np.stack(pdf["_v"].to_numpy())
+                    lo = mat.min(axis=1)
+                    hi = mat.max(axis=1)
+                    scale = hi - lo
+                    safe = np.where(scale == 0.0, 1.0, scale)
+                    q = np.floor(
+                        (mat - lo[:, None]) * levels / safe[:, None] + 0.5
+                    ).astype(np.int32)
+                    q[scale == 0.0] = 0
+                    dq = (
+                        lo[:, None]
+                        + q.astype(np.float64) * scale[:, None] / levels
+                    )
+                    err = np.abs(mat - dq)
+                    tot = np.zeros(len(mat))
+                    for j in range(mat.shape[1]):  # sequential fold == expr
+                        tot += err[:, j]
+                    yield pd.DataFrame(
+                        {
+                            "_id": pdf["_id"].to_numpy(),
+                            "vmin": lo,
+                            "vmax": hi,
+                            "quantized": [list(map(int, r)) for r in q],
+                            "mean_abs_err": tot / mat.shape[1],
+                            "max_abs_err": err.max(axis=1),
+                        }
+                    )
 
         id_type = dict(emb.select(id_col).dtypes)[id_col]
         out = prepared.mapInPandas(

@@ -8,8 +8,9 @@ one task and serializes the solver layer.
 
 ``grouped_apply`` is the solver layer's grouped-map primitive. It is
 ``groupBy(keys).applyInPandas(fn)`` re-expressed as an explicit
-``repartition(n, keys)`` followed by ``mapInPandas`` with an in-task
-pandas groupby, which fixes two things the naive form gets wrong:
+``repartitionByRange(n, keys)`` followed by ``mapInPandas`` with an
+in-task pandas groupby, which fixes three things the naive form gets
+wrong:
 
 1. **Parallelism is plan-owned, not config-owned.** A user repartition
    with an explicit partition count is a ``REPARTITION_BY_NUM`` shuffle,
@@ -20,16 +21,24 @@ pandas groupby, which fixes two things the naive form gets wrong:
    ``minPartitionSize`` override; that config side effect is gone now
    that every solver stage routes through ``grouped_apply`` — asserted
    by ``test_plan_audits.py::test_grouped_apply_survives_aqe``).
-2. **One Python worker round-trip per PARTITION, not per group.** Arrow
+2. **Placement comes from the keys' run-time distribution.** Range
+   bounds are drawn from a sample of the stage's keys (one small
+   sampling job that re-reads the stage's input), so a fleet of k <= n
+   sites gets k distinct partitions — one core per site — and a larger
+   fleet gets contiguous key ranges balanced by row count. A hash
+   placement lets two sites of a two-site fleet share one task while
+   the other core idles.
+3. **One Python worker round-trip per PARTITION, not per group.** Arrow
    transfer + per-task setup is ~10 ms; at one task per tiny group a
    100k-site fleet pays 100k round-trips. Groups in a partition run
    sequentially inside one task, which also lets callers batch across
    groups (see ``solve_tl1_l2d2p365_batch``).
 
-Memory bound per task = the partition's row slice (all groups hash-spread
-over ``n`` partitions), the same bound ``applyInPandas`` already imposed
-per group times groups-per-task — daily/solver tables are a few MB per
-1000 sites, far under executor memory.
+Memory bound per task = the partition's row slice (each of the ``n``
+ranges holds ~1/n of the sampled rows), the same bound
+``applyInPandas`` already imposed per group times groups-per-task —
+daily/solver tables are a few MB per 1000 sites, far under executor
+memory.
 
 ``grouped_apply`` is also the one owner of the per-group stage contract,
 so a solver stage states only its kernel and its output schema: it ships
@@ -46,9 +55,10 @@ from typing import Callable, Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-# Task waves per core: group-to-task assignment is by key hash, so at one
-# task per core the busiest task draws several times the mean solver load
-# (observed 2.6x on a 150-site fleet at 8 cores).
+# Task waves per core: range bounds balance ROWS, not solve time, and a
+# site's solve time varies several-fold with its data, so several
+# smaller ranges per core let the scheduler even the solver load out
+# between cores.
 TASKS_PER_CORE = 4
 
 # Per-group pandas budget for grouped-map kernels. A 3-year 5-min site
@@ -70,12 +80,13 @@ TASKS_PER_CORE = 4
 # OOMs workers), NOT the raw pandas residency of the partition itself.
 # A corrupt ingest so large that merely HOLDING the rows in the Python
 # worker fails would still OOM before the guard fires; the structural
-# mitigation for that layer is the cores*4 hash spread of
-# ``repartition(n, *keys)`` (one partition holds ~1/n of the keys) plus
-# executor memory sized for ``spark.sql.execution.arrow.
-# maxRecordsPerBatch``-scale buffering. A pre-concat check cannot be
-# made per-GROUP without per-key streaming (a batch legitimately mixes
-# many small groups, and one group legitimately spans many batches).
+# mitigation for that layer is the cores*4 range split of
+# ``repartitionByRange(n, *keys)`` (one partition holds ~1/n of the
+# sampled rows) plus executor memory sized for
+# ``spark.sql.execution.arrow.maxRecordsPerBatch``-scale buffering. A
+# pre-concat check cannot be made per-GROUP without per-key streaming
+# (a batch legitimately mixes many small groups, and one group
+# legitimately spans many batches).
 DEFAULT_GROUP_BUDGET_BYTES = 512 * 1024 * 1024
 NO_ERROR = "No error"  # the error column of a stage that returned
 
@@ -183,7 +194,7 @@ def grouped_apply(
 
     ensure_package_on_executors(spark)
     n = max(spark.sparkContext.defaultParallelism * TASKS_PER_CORE, 1)
-    prepared = df.repartition(n, *keys)
+    prepared = df.repartitionByRange(n, *keys)
 
     def _run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdfs = [b for b in batches]

@@ -127,8 +127,9 @@ def run_fleet_pipeline(
 
     ``materialize`` picks the fault-tolerance mode
     (``session.materialize_df``) of every stage output the report reads
-    more than once — the standardized grid, the daily table, the
-    per-day scores and the solver chain's output — so each solver
+    more than once — the min-data guard's failed sites, the per-site
+    sampling, the standardized grid, the daily table, the per-day
+    scores and the solver chain's output — so each solver
     kernel runs once per site: ``"local"`` (default — executor-local
     DISK_ONLY blocks, fastest, but an executor loss fails the job, so use on
     local[k] or dedicated non-preemptible clusters), ``"reliable"``
@@ -147,30 +148,15 @@ def run_fleet_pipeline(
     equal to 1 year", runner.py:117-122) in ``run_loss_analysis_error``
     with null loss fields.
     """
-    # ---- get_data guard (reference data_handler.py:391-394): a site
-    # with fewer than 24 non-negative readings cannot form a day matrix
-    site_counts = measurements.groupBy(site_col).agg(
-        F.sum((F.col("value") >= 0).cast("int")).alias("_n_pos")
-    )
-    bad_sites = site_counts.where(
-        F.coalesce(F.col("_n_pos"), F.lit(0)) < min_positive_values
-    ).select(
-        site_col,
-        F.lit(
-            "Insufficient data to run pipeline. "
-            "Please check your data frame."
-        ).alias("get_data_error"),
-    )
-    good = measurements.join(
-        F.broadcast(bad_sites.select(site_col)), site_col, "left_anti"
-    )
-
     # ---- stage graph. A grouped-map (mapInPandas) output read by k
     # consumers runs its kernel k times unless it is materialized, so
     # every stage output with more than one consumer goes through
     # ``shared`` exactly once:
     #
+    #   bad_sites    -> good, failed
     #   standardized -> daily, scores, std_out   (inside run_pipeline)
+    #   sampling     -> grid, std_meas, std_out, sampling_report
+    #                                            (inside run_pipeline)
     #   daily        -> chain, tz
     #   scores       -> score_report, quality_warn, chain
     #   chain        -> cap, shifts (std_out), chain_report
@@ -179,6 +165,26 @@ def run_fleet_pipeline(
     # kernel.
     def shared(df: DataFrame) -> DataFrame:
         return materialize_df(df, materialize)
+
+    # ---- get_data guard (reference data_handler.py:391-394): a site
+    # with fewer than 24 non-negative readings cannot form a day matrix
+    site_counts = measurements.groupBy(site_col).agg(
+        F.sum((F.col("value") >= 0).cast("int")).alias("_n_pos")
+    )
+    bad_sites = shared(
+        site_counts.where(
+            F.coalesce(F.col("_n_pos"), F.lit(0)) < min_positive_values
+        ).select(
+            site_col,
+            F.lit(
+                "Insufficient data to run pipeline. "
+                "Please check your data frame."
+            ).alias("get_data_error"),
+        )
+    )
+    good = measurements.join(
+        F.broadcast(bad_sites.select(site_col)), site_col, "left_anti"
+    )
 
     # ---- relational core: clamp -> standardize -> daily stats.
     # With no explicit sampling, each site grids at its OWN inferred
@@ -458,9 +464,11 @@ def run_fleet_pipeline(
             "capacity_change"
         ),
         first("cap", "error").alias("capacity_change_error"),
-        (F.count_distinct(of("shift", "shift_hours")) > 1).alias(
-            "time_shift_correction"
-        ),
+        # null, like capacity_change, when the site's shift stage failed
+        F.when(
+            first("shift", "error") == NO_ERROR,
+            F.count_distinct(of("shift", "shift_hours")) > 1,
+        ).alias("time_shift_correction"),
         first("shift", "error").alias("time_shift_error"),
         *[first("loss", c).alias(c) for c in loss_cols],
         first("loss", "error").alias("run_loss_analysis_error"),

@@ -83,8 +83,9 @@ def run_pipeline(
     heterogeneous fleet forced onto one global grid turns every
     slower-cadence site into mostly-null slots and garbage density
     scores). In this mode ``sampling_seconds``/``slots_per_day`` are
-    ignored and the daily energy integral scales by each site's own
-    sampling.
+    ignored, the daily energy integral scales by each site's own
+    sampling, and the per-site ``sampling`` table is materialized in the
+    same ``materialize`` mode as the grid.
     """
     from solar_data_tools_spark.session import materialize_df
 
@@ -97,8 +98,13 @@ def run_pipeline(
         )
 
         # grid cadence = nearest 86400-divisor of the inferred sampling,
-        # so every site's day holds a whole number of slots
-        sampling = snap_sampling_to_day_divisor(sampling)
+        # so every site's day holds a whole number of slots. The
+        # site-sized table has several readers (the grid, the energy
+        # integral, the caller's report), each of which would otherwise
+        # re-run the lag-window inference over the raw rows.
+        sampling = materialize_df(
+            snap_sampling_to_day_divisor(sampling), materialize
+        )
         grid = sampling.select(
             "site", F.col("grid_seconds").alias("sampling_seconds")
         )

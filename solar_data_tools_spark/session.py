@@ -46,8 +46,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # NOTE: no minPartitionSize override. CPU-heavy grouped-map
         # (solver) stages keep their parallelism because grouped_apply
-        # and fit_seasonal_quantile use repartition(n, keys), whose
-        # REPARTITION_BY_NUM hint AQE never coalesces (verified by
+        # uses repartitionByRange(n, keys) and fit_seasonal_quantile
+        # repartition(n, keys), whose REPARTITION_BY_NUM origin AQE
+        # never coalesces (verified by
         # tests/test_plan_audits.py::test_grouped_apply_survives_aqe);
         # relational stages get normal small-partition coalescing.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -100,6 +101,13 @@ def get_spark(
         # local/bench default stays off so short sessions and the
         # driver's bench remain comparable.
         .config("spark.ui.enabled", "false")
+        # Generated-code cache: Spark's default of 100 classes is less
+        # than one fleet report compiles (~245), so every op recompiled
+        # ~185 of them, and the analyst query rotation evicted its own
+        # classes. A static conf: it takes effect only when get_spark
+        # creates the session (the cache is sized once per JVM, at its
+        # first compile), so a session created elsewhere keeps 100.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
     )
     if os.environ.get("SPARK_GRAFT_JIT_HUGE", "") == "1":
         builder = builder.config(

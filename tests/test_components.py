@@ -1844,7 +1844,9 @@ def test_streaming_media_features_matches_batch(spark, tmp_path):
 def test_quantize_embeddings_semantics(spark):
     """Known vectors quantize exactly: endpoints map to 0/255, the
     reconstruction error is bounded by half a quantization step, and a
-    constant vector degrades to all-zeros with zero error."""
+    constant vector degrades to all-zeros with zero error. The input is
+    one partition, so the 3- and 2-dim vectors share an Arrow batch on
+    any core count."""
     from solar_data_tools_spark.operators.similarity import quantize_embeddings
 
     rows = [
@@ -1852,7 +1854,9 @@ def test_quantize_embeddings_semantics(spark):
         (2, [3.25, 3.25, 3.25]),       # constant vector
         (3, [-2.0, 2.0]),              # negative range
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).coalesce(1)
     got = {r["vec_id"]: r for r in quantize_embeddings(emb).collect()}
     assert got[1]["quantized"][0] == 0 and got[1]["quantized"][1] == 255
     assert got[1]["quantized"][2] == 128  # floor(127.5 + .5)

@@ -357,6 +357,7 @@ def test_stalled_w1_grid_solve_is_a_site_time_shift_error(spark, monkeypatch):
         "did not converge in 1 iterations"
     )
     assert rep[7]["time_shift_error"] == stalled
+    assert rep[7]["time_shift_correction"] is None
     assert rep[7]["capacity_change_error"] == "No error"
     assert rep[7]["run_pipeline_error"] == stalled
     assert rep[8]["run_pipeline_error"] == "No error"
@@ -438,6 +439,8 @@ def test_chain_stage_failure_is_that_stages_error_row(
         assert failed[0][-1] == error
         assert all(v is None for v in failed[0][1:-1])
         assert report["run_pipeline_error"] == error
+    if kernel == "time_shift_kernel":
+        assert report["time_shift_correction"] is None
     if kernel == "capacity_change_kernel":
         assert zero_labels.value == 1
         assert report["run_loss_analysis_error"] == "No error"

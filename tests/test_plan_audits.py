@@ -127,8 +127,8 @@ def test_q132_q135_study_sweep_plan_shape(spark, sf_small):
 def test_grouped_apply_survives_aqe(spark):
     """grouped_apply's plan-owned parallelism must survive AQE partition
     coalescing WITHOUT any minPartitionSize override: the explicit
-    repartition(n, keys) carries a REPARTITION_BY_NUM hint that AQE
-    never coalesces, so a tiny (few-hundred-KB) solver shuffle still
+    repartitionByRange(n, keys) keeps the REPARTITION_BY_NUM origin that
+    AQE never coalesces, so a tiny (few-hundred-KB) solver shuffle still
     fans out to the requested task count."""
     import pandas as pd
 
@@ -155,6 +155,102 @@ def test_grouped_apply_survives_aqe(spark):
     assert "REPARTITION_BY_NUM" in plan
     # AQE must not have rewritten the exchange into a coalesced read
     assert "AQEShuffleRead" not in plan or "coalesced" not in plan
+
+
+def test_grouped_apply_puts_each_site_in_its_own_partition(spark):
+    """Two sites at the session's partition count run in two distinct
+    partitions (range bounds come from the sampled keys), so a two-site
+    fleet keeps both cores busy instead of queuing both solves in one
+    task."""
+    import pandas as pd
+
+    from pyspark import TaskContext
+    from pyspark.sql import functions as F
+
+    from solar_data_tools_spark.parallel import grouped_apply
+
+    df = spark.range(2000).select(
+        (F.col("id") % 2).alias("site"), F.col("id").cast("double").alias("v")
+    )
+    out = grouped_apply(
+        df, ["site"],
+        lambda g: pd.DataFrame({
+            "site": [g["site"].iloc[0]],
+            "part": [TaskContext.get().partitionId()],
+        }),
+        "site long, part int",
+    )
+    parts = {r["site"]: r["part"] for r in out.collect()}
+    assert sorted(parts) == [0, 1]
+    assert parts[0] != parts[1]
+
+
+def _measurements(spark, path):
+    """Two 15-min sites over 3 days plus a site under the min-data
+    guard, written to parquet so the measurement scan is a named
+    relation in the plans."""
+    import pandas as pd
+
+    rows = [
+        (site, pd.Timestamp("2024-03-01") + pd.Timedelta(minutes=15 * i),
+         i, float(i % 96))
+        for site in (0, 1) for i in range(3 * 96)
+    ] + [(2, pd.Timestamp("2024-03-01"), 0, 1.0)]
+    pd.DataFrame(rows, columns=["site", "ts", "seq", "value"]).to_parquet(
+        path, coerce_timestamps="us"
+    )
+    return spark.read.parquet(str(path))
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_pipeline_sampling_follows_materialize(spark, tmp_path):
+    """run_pipeline(per_site=True).sampling is a checkpoint read under
+    materialize="local" — its readers scan a site-sized table instead of
+    re-running the lag-window inference over the raw rows — and stays
+    the lazy window + aggregate under "none"."""
+    from solar_data_tools_spark.plans.pipeline import run_pipeline
+
+    meas = _measurements(spark, tmp_path / "m.parquet")
+    local = _optimized(
+        run_pipeline(meas, per_site=True, materialize="local").sampling
+    )
+    lazy = _optimized(
+        run_pipeline(meas, per_site=True, materialize="none").sampling
+    )
+    assert local.lstrip().startswith("LogicalRDD"), local
+    assert "Window" not in local and "Aggregate" not in local
+    assert "Window" in lazy and "Aggregate" in lazy and "parquet" in lazy
+
+
+def test_fleet_bad_sites_follow_materialize(spark, tmp_path, monkeypatch):
+    """The fleet's min-data guard table (read by the good-site filter and
+    by the report's failed rows) is a checkpoint read under
+    materialize="local" and the lazy aggregate over the measurement scan
+    under "none"."""
+    from solar_data_tools_spark.plans import fleet
+
+    meas = _measurements(spark, tmp_path / "m.parquet")
+    fleet_materialize = fleet.materialize_df
+    made = []
+
+    def recording(df, mode):
+        out = fleet_materialize(df, mode)
+        made.append(out)
+        return out
+
+    monkeypatch.setattr(fleet, "materialize_df", recording)
+    plans = {}
+    for mode in ("local", "none"):
+        made.clear()
+        fleet.run_fleet_pipeline(meas, materialize=mode)
+        (bad,) = [df for df in made if "get_data_error" in df.columns]
+        plans[mode] = _optimized(bad)
+    assert plans["local"].lstrip().startswith("LogicalRDD"), plans["local"]
+    assert "Aggregate" not in plans["local"]
+    assert "Aggregate" in plans["none"] and "parquet" in plans["none"]
 
 
 def test_pq_encode_is_zero_shuffle_both_engines(spark, sf_small):
